@@ -2,7 +2,7 @@ package graft
 
 import graft.codec.PostingCodec
 import graft.index.PostingRun
-import graft.search.Topic
+import graft.search.{Query, Topic}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -484,13 +484,8 @@ object SparkEntry {
       val flt = sr.collapseKeyTable(corp, "lang")
         .where(col("ckey") === "en").select("docid")
       val an = new graft.analysis.Analyzer(Engine.CodeAnalyzer)
-      val clauses = topics.flatMap { t =>
-        an.analyze(t.text).zipWithIndex.map { case (term, i) =>
-          graft.search.WeightedClause(t.qid, i, term, 1.0f)
-        }
-      }
-      sr.searchClauses(clauses, TopK, filterDocids = Some(flt),
-          collapseKeys = Some(keys))
+      sr.searchClauses(Query(Query.termClauses(topics, an), filter = Some(flt),
+          collapse = Some(keys)), TopK)
         .select(col("qid"), col("docno"), col("rank").cast("long").as("rank"))
         .orderBy("qid", "rank")
     }),
@@ -1143,8 +1138,8 @@ object SparkEntry {
             graft.search.WeightedClause(qid, i, t, 1.0f)
           }
         }
-      Engine.searcher(s, dir)
-        .searchClauses(wc, TopK, negTerms = Seq("1" -> "window", "2" -> "customer"))
+      Engine.searcher(s, dir).searchClauses(
+        Query(wc, negTerms = Seq("1" -> "window", "2" -> "customer")), TopK)
         .select(col("qid"), col("docno"), col("rank").cast("long").as("rank"))
         .orderBy("qid", "rank")
     }),
@@ -1183,7 +1178,7 @@ object SparkEntry {
         graft.search.PhraseClause("p2", 0,
           Seq(("fast", 0), ("slow", 0), ("query", 1)), 1.0f, 0),
         pp("p3", "dup", "cu"))
-      sr.searchClauses(Nil, TopK, phraseClauses = pcs)
+      sr.searchClauses(Query(pcs), TopK)
         .select(col("qid"), col("docno"), col("rank").cast("long").as("rank"))
         .orderBy("qid", "rank")
     }),
@@ -1514,15 +1509,10 @@ object SparkEntry {
     "q_synonym_topk" -> ((s, dir) => {
       val sr = Engine.searcher(s, dir)
       val an = new graft.analysis.Analyzer(Engine.OracleAnalyzer)
-      val wcs = topics.flatMap { t =>
-        an.analyze(t.text).zipWithIndex.map { case (term, i) =>
-          graft.search.WeightedClause(t.qid, i, term, 1.0f)
-        }
-      }
       val syn = topics.map(t =>
         graft.search.SynonymClause(t.qid, an.analyze(t.text).length,
           SynGroups(t.qid), 1.0f))
-      sr.searchClauses(wcs, TopK, synonymClauses = syn)
+      sr.searchClauses(Query(Query.termClauses(topics, an) ++ syn), TopK)
         .select(col("qid"), col("docno"), col("rank").cast("long").as("rank"))
         .orderBy("qid", "rank")
     }),
@@ -1587,7 +1577,7 @@ object SparkEntry {
         graft.search.ExpansionClause("1", 0, sr.expandRegex(RegexTopic1), 1.0f),
         graft.search.ExpansionClause("2", 0, sr.expandRegex(RegexTopic2), 1.0f))
       val wcs = Seq(graft.search.WeightedClause("1", 1, "merge", 1.0f))
-      sr.searchClauses(wcs, TopK, expansionClauses = ec)
+      sr.searchClauses(Query(wcs ++ ec), TopK)
         .select(col("qid"), col("docno"), col("rank").cast("long").as("rank"))
         .orderBy("qid", "rank")
     }),
@@ -1848,7 +1838,7 @@ object SparkEntry {
         graft.search.ExpansionClause("w1", 0, sr.expandWildcard("s??n"), 1.0f),
         graft.search.ExpansionClause("w2", 0, sr.expandWildcard("qu*"), 1.0f))
       val wcs = Seq(graft.search.WeightedClause("w1", 1, "table", 1.0f))
-      sr.searchClauses(wcs, TopK, expansionClauses = ec)
+      sr.searchClauses(Query(wcs ++ ec), TopK)
         .select(col("qid"), col("docno"), col("rank").cast("long").as("rank"))
         .orderBy("qid", "rank")
     }),
@@ -1861,7 +1851,7 @@ object SparkEntry {
         graft.search.ExpansionClause("r1", 0, sr.expandRange("scan", "sort"), 1.0f),
         graft.search.ExpansionClause("r2", 0, sr.expandRange("dup", "fast"), 1.0f))
       val wcs = Seq(graft.search.WeightedClause("r1", 1, "merge", 1.0f))
-      sr.searchClauses(wcs, TopK, expansionClauses = ec)
+      sr.searchClauses(Query(wcs ++ ec), TopK)
         .select(col("qid"), col("docno"), col("rank").cast("long").as("rank"))
         .orderBy("qid", "rank")
     }),

@@ -136,8 +136,9 @@ object Curation {
   /** Deterministic stratified sampling: per group (stratum), keep the `n`
     * documents with the smallest `md5(salt:docno)` (docno tie-break) —
     * the fixed-quota-per-stratum draw a training-mix builder takes per
-    * language/source. A bounded-heap [[org.apache.spark.sql.expressions.Aggregator]]
-    * gives map-side partial aggregation: the per-group shuffle moves at
+    * language/source. The engine's bounded top-k
+    * ([[graft.search.BoundedTopK]], (skey, docno) ascending) gives map-side
+    * partial aggregation: the per-group shuffle moves at
     * most `n` rows per map partition, never the stratum's row stream, and
     * no stratum is ever sorted whole. Output (strat, docno, rank) with
     * rank 1..n in sample order.
@@ -147,7 +148,9 @@ object Curation {
     require(n > 0, s"sample size must be positive, got $n")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val agg = new BoundedMinAgg(n, implicitly[org.apache.spark.sql.Encoder[Seq[(String, String)]]])
+    val enc = implicitly[org.apache.spark.sql.Encoder[Seq[(String, String)]]]
+    val agg = new graft.search.BoundedTopK[(String, String, String), (String, String)](
+      n, r => (r._2, r._3), Ordering[(String, String)], enc, enc)
     corpus.select(col(groupCol).cast("string").as("strat"),
         md5(concat_ws(":", lit(salt), col("docno"))).as("skey"),
         col("docno"))
@@ -205,26 +208,4 @@ object Curation {
       }
     }.toDF("docno", "w", "cum_before")
   }
-}
-
-/** Bounded n-smallest aggregator over ((strat,) skey, docno) — the
-  * sampling sibling of the search TopKAgg: ascending (skey, docno) order,
-  * buffer capped at n with amortized compaction, mergeable partials.
-  */
-final class BoundedMinAgg(n: Int,
-                          enc: org.apache.spark.sql.Encoder[Seq[(String, String)]])
-    extends org.apache.spark.sql.expressions.Aggregator[
-      (String, String, String), Seq[(String, String)], Seq[(String, String)]] {
-  private def compact(s: Seq[(String, String)]): Seq[(String, String)] =
-    s.sorted.take(n)
-  def zero: Seq[(String, String)] = Vector.empty
-  def reduce(buf: Seq[(String, String)], in: (String, String, String)): Seq[(String, String)] = {
-    val b2 = buf :+ ((in._2, in._3))
-    if (b2.size >= 4 * n) compact(b2) else b2
-  }
-  def merge(a: Seq[(String, String)], b: Seq[(String, String)]): Seq[(String, String)] =
-    compact(a ++ b)
-  def finish(buf: Seq[(String, String)]): Seq[(String, String)] = compact(buf)
-  def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(String, String)]] = enc
-  def outputEncoder: org.apache.spark.sql.Encoder[Seq[(String, String)]] = enc
 }

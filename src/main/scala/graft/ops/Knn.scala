@@ -1,7 +1,7 @@
 package graft.ops
 
+import graft.search.BoundedTopK
 import org.apache.spark.sql.{Column, DataFrame, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *   come from matching `nProbe`-neighborhood buckets instead of scanning
   *   everything.
   *
-  * The per-query top-k is a bounded-heap typed Aggregator (same collector
-  * shape as the search engine's `TopKAgg`): partial heaps of ≤4k entries
+  * The per-query top-k is the engine's one bounded top-k aggregator
+  * ([[graft.search.BoundedTopK]], cos desc then vec_id asc, NaN cosines
+  * ranked as Spark's ORDER BY ranks them): partial heaps of ≤4k entries
   * merge map-side, so no reducer ever holds — let alone sorts — a full
   * per-query candidate list. (Round 1 used `Window.partitionBy(qid)`,
   * which funnels ALL scored rows of a query through one reducer; at 10^9
@@ -89,7 +90,9 @@ object Knn {
   private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    val agg = new VecTopKAgg(k, implicitly[Encoder[Seq[(Long, Double)]]])
+    val enc = implicitly[Encoder[Seq[(Long, Double)]]]
+    val agg = new BoundedTopK[(Long, Long, Double), (Long, Double)](
+      k, r => (r._2, r._3), BoundedTopK.byDoubleScore, enc, enc)
     scored.select(col("qid").cast("long"), col("vec_id").cast("long"),
         col("cos").cast("double"))
       .as[(Long, Long, Double)]
@@ -441,26 +444,4 @@ object Knn {
           col("qn"), col("vn")).as("cos"))
     rankTopK(scored, k)
   }
-}
-
-/** Bounded top-k heap over (qid, vec_id, cos): buffers stay ≤ 4k entries,
-  * partial buffers merge associatively (map-side combine), final order is
-  * (cos desc, vec_id asc) — the kNN twin of the engine's `TopKAgg`.
-  */
-final class VecTopKAgg(k: Int, enc: Encoder[Seq[(Long, Double)]])
-    extends Aggregator[(Long, Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
-  private def better(a: (Long, Double), b: (Long, Double)): Boolean =
-    a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
-  private def compact(s: Seq[(Long, Double)]): Seq[(Long, Double)] =
-    s.sortWith(better).take(k)
-  def zero: Seq[(Long, Double)] = Vector.empty
-  def reduce(buf: Seq[(Long, Double)], in: (Long, Long, Double)): Seq[(Long, Double)] = {
-    val b2 = buf :+ ((in._2, in._3))
-    if (b2.size >= 4 * k) compact(b2) else b2
-  }
-  def merge(a: Seq[(Long, Double)], b: Seq[(Long, Double)]): Seq[(Long, Double)] =
-    compact(a ++ b)
-  def finish(buf: Seq[(Long, Double)]): Seq[(Long, Double)] = compact(buf)
-  def bufferEncoder: Encoder[Seq[(Long, Double)]] = enc
-  def outputEncoder: Encoder[Seq[(Long, Double)]] = enc
 }

@@ -271,7 +271,7 @@ object BoolQuery {
     * tree is exactly the NaN-skipping sum of the matched leaf partials —
     * the flat disjunctive score — so block-max WAND's seed threshold
     * remains a valid lower bound and the Searcher keeps pruning enabled
-    * for these queries (Searcher.searchClauses gate).
+    * for these queries (Searcher.scoredClauses gate).
     */
   def prunableShape(n: EvalNode): Boolean = n match {
     case ELeaf(_) => true

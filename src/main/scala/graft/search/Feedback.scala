@@ -123,7 +123,7 @@ object Feedback {
     val clauses = expandedClauses(qid, docs, corpus,
       searcher.index.cfg.analyzer, topTermsToKeep)
     val excluded = docs.flatMap(_.docno).toSet
-    searcher.searchClauses(clauses, k, scorerName,
-      excludeDocnos = Map(qid -> excluded))
+    searcher.searchClauses(Query(clauses, excludeDocnos = Map(qid -> excluded)),
+      k, scorerName)
   }
 }

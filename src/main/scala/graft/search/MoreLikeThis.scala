@@ -1,9 +1,7 @@
 package graft.search
 
 import graft.analysis.Analyzer
-import graft.index.IndexLayout
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
 
 /** Lucene `MoreLikeThis` analog — "find documents similar to this one",
   * the search-UI companion the reference's stack inherits from Lucene's
@@ -34,12 +32,7 @@ object MoreLikeThis {
     val (tfs, _) = an.termFreqs(text)
     val tfMap = tfs.toMap
     if (tfMap.isEmpty) return Nil
-    val termSeq = tfMap.keys.toSeq
-    val buckets = termSeq.map(IndexLayout.bucketOf(_, idx.cfg.buckets)).distinct
-    import idx.spark.implicits._
-    val dfs = idx.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(termSeq: _*))
-      .select(col("term"), col("df")).as[(String, Long)].collect().toMap
+    val dfs = Searcher.termStats(idx, tfMap.keys.toSeq).map { case (t, (df, _)) => t -> df }
     val n = idx.stats.max_doc.toDouble
     tfMap.toSeq
       .flatMap { case (t, tf) =>
@@ -60,7 +53,7 @@ object MoreLikeThis {
     val clauses = terms.zipWithIndex.map { case ((t, _), i) =>
       WeightedClause(qid, i, t, 1.0f)
     }
-    searcher.searchClauses(clauses, k, scorerName,
-      excludeDocnos = Map(qid -> Set(docno)))
+    searcher.searchClauses(Query(clauses, excludeDocnos = Map(qid -> Set(docno))),
+      k, scorerName)
   }
 }

@@ -4,7 +4,6 @@ import graft.analysis.Analyzer
 import graft.codec.PostingCodec
 import graft.index.{BuiltIndex, IndexLayout, PostingRun}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 /** A batched topic query (≙ one `<top>` of the reference's query file,
@@ -17,66 +16,6 @@ final case class Topic(qid: String, text: String)
   */
 final case class RunLine(qid: String, docno: String, rank: Int, score: Float, runtag: String)
 
-/** One boosted term clause of a query (≙ a SHOULD TermQuery with boost). */
-final case class WeightedClause(qid: String, qidx: Int, term: String, boost: Float)
-
-/** One phrase clause (≙ an analyzed Lucene PhraseQuery): `terms` are
-  * the analyzed (term, offset) slots where offset is the token's position
-  * within the phrase COUNTING stopped words (positionIncrement gaps), so
-  * "quick the fox" with "the" stopped matches quick@p ∧ fox@p+2. Requires a
-  * positions-enabled index (`IndexConfig.indexPositions`).
-  *
-  * `slop = 0` is exact adjacency (ExactPhraseScorer). `slop > 0` is sloppy
-  * matching (`"…"~N`) via [[SloppyPhrase.freq]] — the faithful
-  * SloppyPhraseScorer event walk: every match window within the slop
-  * contributes the reference similarity's `computeSlopFactor`
-  * `1/(matchLength+1)` (`BM25.java:110-114`) where matchLength is the
-  * window width `end − min` over phase-adjusted positions, and slots
-  * repeating a term are pinned to distinct document occurrences. For
-  * 2-term phrases this coincides with the per-slot-nearest form the
-  * q_phrase_slop_topk oracle replays as a SQL position self-join
-  * (cross-checked on a random battery in PhraseSpec); the gate's sloppy
-  * topics are 2-term, so the oracle stays exact.
-  */
-final case class PhraseClause(qid: String, qidx: Int,
-                              terms: Seq[(String, Int)], boost: Float,
-                              slop: Int = 0)
-
-/** One constant-score expansion clause (≙ PrefixQuery under Lucene's
-  * CONSTANT_SCORE rewrite): every document containing ANY of the expanded
-  * vocabulary terms scores the clause boost exactly once. Expansion happens
-  * against the index's sorted vocabulary projection (a pruned range scan,
-  * never a postings or full-vocabulary pass).
-  */
-final case class ExpansionClause(qid: String, qidx: Int,
-                                 terms: Seq[String], boost: Float)
-
-/** One scored-expansion clause (≙ FuzzyQuery under Lucene 5.4's default
-  * `TopTermsBlendedFreqScoringRewrite(50)`, the rewrite SimpleQueryParser's
-  * `~N` produces for the reference at `BatchSearch.java:252`): each
-  * expanded term scores like a boosted TermQuery whose docFreq is BLENDED —
-  * the max df (and max cf) across the expansion set — and a document
-  * matching several expanded terms sums their partials (BooleanQuery
-  * SHOULD), in deterministic (distance asc, term asc) expansion order.
-  * `terms` carries (term, fuzzyBoost) where fuzzyBoost is FuzzyTermsEnum's
-  * `1 − editDistance / min(|query|, |term|)` (codepoints), 1.0 at
-  * distance 0.
-  */
-final case class BlendedClause(qid: String, qidx: Int,
-                               terms: Seq[(String, Float)], boost: Float)
-
-/** One synonym-group clause (≙ Lucene `SynonymQuery`, the query-time
-  * synonym-expansion primitive): the group scores as a SINGLE pseudo-term —
-  * a document's frequency is the SUM of the member terms' tfs, saturated by
-  * the scorer's TF function ONCE against one blended weight built from the
-  * group's max docFreq (and summed collectionFreq), exactly
-  * `SynonymQuery.SynonymWeight`'s `docFreq = max, totalTermFreq = Σ` /
-  * `SynonymScorer.freq = Σ`. This differs from [[BlendedClause]] (fuzzy),
-  * which scores each member separately and sums the PARTIALS.
-  */
-final case class SynonymClause(qid: String, qidx: Int,
-                               terms: Seq[String], boost: Float)
-
 /** Batch retrieval — the Spark-native reimplementation of the reference's
   * `BatchSearch` lifecycle (SURVEY.md §3.2). The Lucene boolean OR scorer
   * (union of query-term posting lists, per-doc float score sum, bounded
@@ -87,13 +26,17 @@ final case class SynonymClause(qid: String, qidx: Int,
   *     → streaming blob decode → per-clause Float partial scores
   *     → per-(query, doc) sum in deterministic clause order (Float addition
   *       is not associative; SURVEY.md §7.5)
-  *     → per-query bounded top-k via a typed Aggregator (map-side partial
+  *     → per-query bounded top-k via [[TopKAgg]] (map-side partial
   *       heaps merge like Lucene's collector, so no single reducer ever
   *       holds a full candidate list)
-  *     → docno attach (broadcast of the tiny result set against the doc
-  *       table) → dedup-by-docno keeping the first pre-dedup rank
+  *     → the ≤ k rows per query collected to the driver → docno attach
+  *       (one grp-pruned point lookup on the doc table, see [[collectTopK]])
+  *       → dedup-by-docno keeping the first pre-dedup rank
   *       (`BatchSearch.java:290,296-304` — the FR-collection duplicate
   *       workaround; ranks skip after a duplicate, replicated faithfully).
+  *
+  * Every scored entry point builds a [[Query]] and runs it through
+  * [[searchClauses]] / [[scoredClauses]].
   *
   * Query analysis reuses the index's persisted analyzer config, ruling out
   * the reference's possible index/query analyzer mismatch by construction.
@@ -101,12 +44,22 @@ final case class SynonymClause(qid: String, qidx: Int,
 final class Searcher(val index: BuiltIndex) {
   private val spark: SparkSession = index.spark
   private val analyzer = new Analyzer(index.cfg.analyzer)
-  // term → Some((df, cf)) | None for terms absent from the index — shared
-  // ACROSS Searcher instances per immutable index identity (r6): entries
-  // construct fresh Searchers on the same snapshot (delete overlays,
-  // purge handles), and an index's term statistics never change, so the
-  // memo belongs to the index, not the handle.
-  private val statsCache = Searcher.statsCacheFor(index)
+  private def collStats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
+
+  /** (df, cf) of the indexed `terms`, through the per-index memo. */
+  private def termStats(terms: Seq[String]): Map[String, (Long, Long)] =
+    Searcher.termStats(index, terms)
+
+  /** `table` (postings or a postings view) restricted to `terms`. */
+  private def postingsFor(table: DataFrame, terms: Iterable[String]): Dataset[PostingRun] = {
+    import spark.implicits._
+    Searcher.bucketPruned(index, table, terms).as[PostingRun]
+  }
+
+  private def topK(k: Int): TopKAgg = {
+    import spark.implicits._
+    new TopKAgg(k, implicitly, implicitly)
+  }
 
   /** Sorted tombstone docids (equality-delete overlay, [[graft.index
     * .Deletes]]), broadcast once per searcher; None on a delete-free index
@@ -131,21 +84,25 @@ final class Searcher(val index: BuiltIndex) {
     require(topics.map(_.qid).distinct.size == topics.size,
       s"topics must have distinct qids, got: ${topics.map(_.qid).mkString(", ")}")
 
+  /** One SHOULD term clause per analyzed token ([[Query.termClauses]]). */
+  private def terms(topics: Seq[Topic]): Seq[WeightedClause] = {
+    requireDistinctQids(topics)
+    Query.termClauses(topics, analyzer)
+  }
+
+  /** analyzed term → the qids whose topic text holds it. */
+  private def termQids(topics: Seq[Topic]): Map[String, Seq[String]] = {
+    requireDistinctQids(topics)
+    topics.flatMap(t => analyzer.analyze(t.text).distinct.map(_ -> t.qid))
+      .groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
+  }
+
   def search(topics: Seq[Topic], k: Int = 1000,
              scorerName: String = "bm25",
              pruning: Boolean = false,
-             minShouldMatch: Int = 0): Dataset[RunLine] = {
-    requireDistinctQids(topics)
-    // ≙ SimpleQueryParser over analyzed text: one SHOULD clause per token
-    // occurrence, in token order (`BatchSearch.java:189-190,252`).
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    searchClauses(clauses, k, scorerName, pruning = pruning,
-      minShouldMatch = minShouldMatch)
-  }
+             minShouldMatch: Int = 0): Dataset[RunLine] =
+    searchClauses(Query(terms(topics), prune = pruning,
+      minShouldMatch = minShouldMatch), k, scorerName)
 
   /** Phrase-via-shingles rewrite (≙ Elasticsearch `index_phrases` /
     * MatchPhraseQuery routed to a 2-shingle subfield): on an index whose
@@ -176,7 +133,7 @@ final class Searcher(val index: BuiltIndex) {
           s"${shingles.length}); longer phrases need the positional path")
       WeightedClause(qid, 0, shingles.head, 1.0f)
     }
-    searchClauses(clauses, k, scorerName)
+    searchClauses(Query(clauses), k, scorerName)
   }
 
   /** Per-hit scoring breakdown (≙ IndexSearcher.explain, the debugging
@@ -195,11 +152,7 @@ final class Searcher(val index: BuiltIndex) {
     val hits = search(topics, k, scorerName).collect()
     val byQid: Map[String, Set[String]] =
       hits.groupBy(_.qid).map { case (q, hs) => q -> hs.map(_.docno).toSet }
-    val hitDocnos = hits.map(_.docno).distinct.toSeq
-    val ids: Map[String, Long] =
-      if (hitDocnos.isEmpty) Map.empty
-      else index.docs.where(col("docno").isin(hitDocnos: _*))
-        .select("docno", "docid").as[(String, Long)].collect().toMap
+    val ids = docidLookup(hits.map(_.docno).toSeq)
     val qterms: Seq[(String, String)] = topics.flatMap(t =>
       analyzer.analyze(t.text).distinct.map(term => (t.qid, term)))
     // (docid → (qid, docno)) pairs for the explained hits, broadcast-sized
@@ -211,10 +164,7 @@ final class Searcher(val index: BuiltIndex) {
       qterms.groupBy(_._1).map { case (q, ts) => q -> ts.map(_._2).toSet }
     val termsByQidB = spark.sparkContext.broadcast(termsByQid)
     val terms = qterms.map(_._2).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val comp = index.postingsDecode
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .as[PostingRun]
+    val comp = postingsFor(index.postingsDecode, terms)
       .flatMap { run =>
         PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
           .flatMap { p =>
@@ -224,8 +174,7 @@ final class Searcher(val index: BuiltIndex) {
               .map { case (q, d) => (q, d, run.term, p.tf.toLong, p.dl.toLong) }
           }
       }.toDF("qid", "docno", "term", "tf", "dl")
-    val dfs = index.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
+    val dfs = Searcher.bucketPruned(index, index.termStats, terms)
       .select(col("term"), col("df").cast("long").as("df"))
     comp.join(dfs, Seq("term"))
       .select(col("qid"), col("docno"), col("term"),
@@ -267,15 +216,8 @@ final class Searcher(val index: BuiltIndex) {
     */
   private[graft] def scoredTopics(topics: Seq[Topic],
                                    scorerName: String = "bm25")
-      : Dataset[(String, Long, Float)] = {
-    requireDistinctQids(topics)
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    scoredClauses(clauses, scorerName = scorerName)
-  }
+      : Dataset[(String, Long, Float)] =
+    scoredClauses(Query(terms(topics)), scorerName = scorerName)
 
   /** Field-collapsed top-k (≙ Lucene's grouping module /
     * CollapsingTopDocsCollector over a SortedDocValues field — the code-
@@ -287,32 +229,18 @@ final class Searcher(val index: BuiltIndex) {
     * bounds the global kth score, but a key's winner may rank anywhere.
     */
   def searchCollapsed(topics: Seq[Topic], keys: DataFrame, k: Int = 1000,
-                      scorerName: String = "bm25"): Dataset[RunLine] = {
-    requireDistinctQids(topics)
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    searchClauses(clauses, k, scorerName, collapseKeys = Some(keys))
-  }
+                      scorerName: String = "bm25"): Dataset[RunLine] =
+    searchClauses(Query(terms(topics), collapse = Some(keys)), k, scorerName)
 
   /** Attribute-filtered search (≙ a BooleanQuery FILTER clause over a
-    * doc-values field — "lang:java"): candidates outside `filterDocids`
+    * doc-values field — "lang:java"): candidates outside `filter`
     * (a (docid) table, e.g. a predicate over [[collapseKeyTable]]) are
     * removed before the collector, so ranks close up; scoring is
-    * untouched. Composes with collapse via [[searchClauses]].
+    * untouched. Composes with collapse in one [[Query]].
     */
   def searchFiltered(topics: Seq[Topic], filter: DataFrame, k: Int = 1000,
-                     scorerName: String = "bm25"): Dataset[RunLine] = {
-    requireDistinctQids(topics)
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    searchClauses(clauses, k, scorerName, filterDocids = Some(filter))
-  }
+                     scorerName: String = "bm25"): Dataset[RunLine] =
+    searchClauses(Query(terms(topics), filter = Some(filter)), k, scorerName)
 
   /** The (docid, ckey) doc-values table for [[searchCollapsed]]: index docs
     * joined once with the corpus attribute column — the Spark analog of
@@ -339,29 +267,11 @@ final class Searcher(val index: BuiltIndex) {
     * like Lucene facets over docs missing the doc value.
     */
   def facetCounts(topics: Seq[Topic], keys: DataFrame): DataFrame = {
-    requireDistinctQids(topics)
     import spark.implicits._
-    val termQids: Map[String, Seq[String]] = topics
-      .flatMap(t => analyzer.analyze(t.text).distinct.map(_ -> t.qid))
-      .groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
-    if (termQids.isEmpty)
+    val byTerm = termQids(topics)
+    if (byTerm.isEmpty)
       return Seq.empty[(String, String, Long)].toDF("qid", "ckey", "n_docs")
-    val buckets =
-      termQids.keySet.map(IndexLayout.bucketOf(_, index.cfg.buckets)).toSeq
-    val bc = spark.sparkContext.broadcast(termQids)
-    val tombL = tombstonesBc
-    val matched = index.postingsMatch
-      .where(col("bucket").isin(buckets: _*) &&
-        col("term").isin(termQids.keys.toSeq: _*))
-      .as[PostingRun]
-      .flatMap { run =>
-        val qids = bc.value(run.term)
-        PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
-          .filter(d => Searcher.liveDoc(tombL, d))
-          .flatMap(d => qids.map(q => (q, d)))
-      }
-      .toDF("qid", "docid").distinct()
-    matched.join(keys, Seq("docid"))
+    matchPairs(byTerm, "qid").join(keys, Seq("docid"))
       .groupBy("qid", "ckey").agg(count(lit(1)).as("n_docs"))
   }
 
@@ -375,12 +285,8 @@ final class Searcher(val index: BuiltIndex) {
     import spark.implicits._
     val terms = analyzer.analyze(text).distinct.toSeq
     require(terms.size == 1, s"termDocnos expects one analyzed term, got $terms")
-    val term = terms.head
     val tombL = tombstonesBc
-    val matched = index.postingsMatch
-      .where(col("bucket") === IndexLayout.bucketOf(term, index.cfg.buckets) &&
-        col("term") === term)
-      .as[PostingRun]
+    val matched = postingsFor(index.postingsMatch, terms)
       .flatMap { run =>
         PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
           .filter(d => Searcher.liveDoc(tombL, d))
@@ -401,38 +307,20 @@ final class Searcher(val index: BuiltIndex) {
     * disjunctive bag-of-words match of [[search]]; `keys` is a
     * (docid, ckey) table from [[collapseKeyTable]]. Docs without a key row
     * are omitted (Lucene would sort missing-value docs last). The per-qid
-    * heap is bounded ([[SortTopKAgg]], map-side partials), so the shuffle
+    * heap is bounded ([[BoundedTopK]], map-side partials), so the shuffle
     * moves ≤ 4k rows per partition regardless of match count. Returns
     * (qid, docno, rank, ckey).
     */
   def searchSorted(topics: Seq[Topic], keys: DataFrame, k: Int = 1000): DataFrame = {
-    requireDistinctQids(topics)
     import spark.implicits._
-    val termQids: Map[String, Seq[String]] = topics
-      .flatMap(t => analyzer.analyze(t.text).distinct.map(_ -> t.qid))
-      .groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
-    if (termQids.isEmpty)
+    val byTerm = termQids(topics)
+    if (byTerm.isEmpty)
       return Seq.empty[(String, String, Long, String)]
         .toDF("qid", "docno", "rank", "ckey")
-    val buckets =
-      termQids.keySet.map(IndexLayout.bucketOf(_, index.cfg.buckets)).toSeq
-    val bc = spark.sparkContext.broadcast(termQids)
-    val tombL = tombstonesBc
-    val matched = index.postingsMatch
-      .where(col("bucket").isin(buckets: _*) &&
-        col("term").isin(termQids.keys.toSeq: _*))
-      .as[PostingRun]
-      .flatMap { run =>
-        val qids = bc.value(run.term)
-        PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
-          .filter(d => Searcher.liveDoc(tombL, d))
-          .flatMap(d => qids.map(q => (q, d)))
-      }
-      .toDF("qid", "docid").distinct()
-    val agg = new SortTopKAgg(k,
-      implicitly[Encoder[Seq[(String, Long)]]],
-      implicitly[Encoder[Seq[(String, Long)]]])
-    val top = matched.join(keys.select($"docid", $"ckey"), Seq("docid"))
+    val enc = implicitly[Encoder[Seq[(String, Long)]]]
+    val agg = new BoundedTopK[(String, Long, String), (String, Long)](
+      k, r => (r._3, r._2), Ordering[(String, Long)], enc, enc)
+    val top = matchPairs(byTerm, "qid").join(keys.select($"docid", $"ckey"), Seq("docid"))
       .select($"qid", $"docid", $"ckey")
       .as[(String, Long, String)]
       .groupByKey(_._1).agg(agg.toColumn)
@@ -470,12 +358,7 @@ final class Searcher(val index: BuiltIndex) {
   def searchAfter(topics: Seq[Topic], cursors: Map[String, (Float, String)],
                   k: Int = 1000, scorerName: String = "bm25"): Dataset[RunLine] = {
     requireDistinctQids(topics)
-    import spark.implicits._
-    val docnos = cursors.values.map(_._2).toSeq.distinct
-    val ids: Map[String, Long] =
-      if (docnos.isEmpty) Map.empty
-      else index.docs.where(col("docno").isin(docnos: _*))
-        .select("docno", "docid").as[(String, Long)].collect().toMap
+    val ids = docidLookup(cursors.values.map(_._2).toSeq)
     val cur: Map[String, (Float, Long)] = cursors.map { case (q, (sc, dn)) =>
       q -> (sc, ids.getOrElse(dn,
         throw new IllegalArgumentException(s"cursor docno not in index: $dn")))
@@ -512,16 +395,13 @@ final class Searcher(val index: BuiltIndex) {
     */
   def topHits(topics: Seq[Topic], keys: DataFrame, n: Int = 3,
               scorerName: String = "bm25"): DataFrame = {
-    requireDistinctQids(topics)
     import spark.implicits._
-    val agg = new TopKAgg(n, implicitly[Encoder[Seq[(Long, Float)]]],
-      implicitly[Encoder[Seq[(Long, Float)]]])
     val keyed = scoredTopics(topics, scorerName).toDF("qid", "docid", "score")
       .join(keys.select($"docid", $"ckey"), Seq("docid"))
       .select(concat($"qid", lit("\u0000"), $"ckey").as("gk"),
         $"docid", $"score")
       .as[(String, Long, Float)]
-    val top = keyed.groupByKey(_._1).agg(agg.toColumn)
+    val top = keyed.groupByKey(_._1).agg(topK(n).toColumn)
     val ranked = top.collect().flatMap { case (gk, hits) =>
       val i = gk.indexOf('\u0000')
       val (qid, ckey) = (gk.substring(0, i), gk.substring(i + 1))
@@ -543,6 +423,16 @@ final class Searcher(val index: BuiltIndex) {
     * the pruned read the old grp equi-joins achieved, minus the broadcast
     * build (r6).
     */
+  /** docno → docid for a driver-bounded docno set (≙ the reference's
+    * docno TermQuery lookups, SURVEY.md §2.3).
+    */
+  private def docidLookup(docnos: Seq[String]): Map[String, Long] = {
+    import spark.implicits._
+    if (docnos.isEmpty) Map.empty
+    else index.docs.where(col("docno").isin(docnos.distinct: _*))
+      .select("docno", "docid").as[(String, Long)].collect().toMap
+  }
+
   private def docnoLookup(ids: Seq[Long]): Map[Long, String] = {
     import spark.implicits._
     if (ids.isEmpty) return Map.empty
@@ -591,7 +481,6 @@ final class Searcher(val index: BuiltIndex) {
   def searchFunctionScore(topics: Seq[Topic], factors: DataFrame,
                           k: Int = 1000, scorerName: String = "bm25",
                           missing: Float = 1.0f): Dataset[RunLine] = {
-    requireDistinctQids(topics)
     import spark.implicits._
     val boosted = scoredTopics(topics, scorerName).toDF("qid", "docid", "score")
       .join(factors.select($"docid", $"factor".cast("float").as("factor")),
@@ -604,23 +493,9 @@ final class Searcher(val index: BuiltIndex) {
 
   /** Conjunctive variant: only docs containing every analyzed query term. */
   def searchAnd(topics: Seq[Topic], k: Int = 1000,
-                scorerName: String = "bm25"): Dataset[RunLine] = {
-    requireDistinctQids(topics)
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    searchClauses(clauses, k, scorerName, mode = "and")
-  }
+                scorerName: String = "bm25"): Dataset[RunLine] =
+    searchClauses(Query(terms(topics), Mode.And), k, scorerName)
 
-  /** Retrieval over explicit weighted clauses (≙ boosted TermQuerys — used
-    * by the relevance-feedback path, which emits `term^weight` pairs,
-    * `ExplicitFeedbackM1PreProcessor.java:321-352`). `excludeDocnos` removes
-    * documents per query BEFORE ranking (≙ `FeedbackDocumentFilter`
-    * rewriting TopDocs before ranks are assigned,
-    * `BatchSearch.java:238-249,286-287`).
-    */
   /** Pruning accumulators of the most recent pruned search (blocks decoded
     * vs skipped), populated once the returned Dataset is acted on — for
     * tests and diagnostics.
@@ -678,7 +553,7 @@ final class Searcher(val index: BuiltIndex) {
     * operator chains, `( )` groups, `-` negation via the match-all wrap,
     * `"…"`/`"…"~N` phrases, `*` prefix, `~N` fuzzy, `\` escapes — and the
     * tree is evaluated per document over the distributed partial-score
-    * stream (see `trees` in [[searchClauses]]).
+    * stream (see `trees` in [[Query]]).
     *
     * Faithful-negation note: under the parser's default SHOULD operator a
     * negated clause does NOT exclude documents that match other SHOULD
@@ -686,7 +561,7 @@ final class Searcher(val index: BuiltIndex) {
     * every document outside the negated set (the well-documented
     * `SimpleQueryParser` wrap). Callers wanting a true sibling MUST_NOT
     * (hard exclusion) build it programmatically via
-    * [[searchClauses]]'s `negTerms`.
+    * [[Query]]'s `negTerms`.
     */
   def searchQuery(topics: Seq[Topic], k: Int = 1000,
                   scorerName: String = "bm25",
@@ -696,34 +571,28 @@ final class Searcher(val index: BuiltIndex) {
     // topics' clauses covered by one surviving TreeSpec (the uncovered-qid
     // check below cannot catch this case)
     requireDistinctQids(topics)
-    val wc = Seq.newBuilder[WeightedClause]
-    val pc = Seq.newBuilder[PhraseClause]
-    val ec = Seq.newBuilder[ExpansionClause]
-    val bc = Seq.newBuilder[BlendedClause]
+    val cb = Seq.newBuilder[Clause]
     val treeB = Map.newBuilder[String, TreeSpec]
     topics.foreach { t =>
       BoolQuery.parse(t.text, leafFactory).foreach { root =>
         var i = 0
         val prohibited = Set.newBuilder[Int]
         var nMatchAll = 0
+        def leaf(underNot: Boolean)(clause: Int => Clause): EvalNode = {
+          val q = i; i += 1; if (underNot) prohibited += q
+          cb += clause(q)
+          ELeaf(q)
+        }
         def go(n: Node, underNot: Boolean): EvalNode = n match {
           case MatchAllNode =>
             if (!underNot) nMatchAll += 1
-            EConst(1.0f) // queryNorm folded in by searchClauses
-          case TermLeaf(term) =>
-            val q = i; i += 1; if (underNot) prohibited += q
-            wc += WeightedClause(t.qid, q, term, 1.0f)
-            ELeaf(q)
+            EConst(1.0f) // queryNorm folded in by scoredClauses
+          case TermLeaf(term) => leaf(underNot)(WeightedClause(t.qid, _, term, 1.0f))
           case PhraseLeaf(slots, slop) =>
-            val q = i; i += 1; if (underNot) prohibited += q
-            pc += PhraseClause(t.qid, q, slots, 1.0f, slop)
-            ELeaf(q)
+            leaf(underNot)(PhraseClause(t.qid, _, slots, 1.0f, slop))
           case PrefixLeaf(p) =>
-            val q = i; i += 1; if (underNot) prohibited += q
-            ec += ExpansionClause(t.qid, q, expandPrefix(p), 1.0f)
-            ELeaf(q)
-          case FuzzyLeaf(base, d) =>
-            val q = i; i += 1; if (underNot) prohibited += q
+            leaf(underNot)(ExpansionClause(t.qid, _, expandPrefix(p), 1.0f))
+          case FuzzyLeaf(base, d) => leaf(underNot) { q =>
             val baseCp = base.codePointCount(0, base.length)
             val boosted = expandFuzzy(base, d).map { case (term, dist) =>
               val termCp = term.codePointCount(0, term.length)
@@ -731,8 +600,8 @@ final class Searcher(val index: BuiltIndex) {
                 else 1.0f - dist.toFloat / math.min(baseCp, termCp).toFloat
               (term, boost)
             }
-            bc += BlendedClause(t.qid, q, boosted, 1.0f)
-            ELeaf(q)
+            BlendedClause(t.qid, q, boosted, 1.0f)
+          }
           case BoolNode(children) =>
             EBool(children.map { case (occ, child) =>
               val code = occ match {
@@ -752,9 +621,7 @@ final class Searcher(val index: BuiltIndex) {
       import spark.implicits._
       return spark.emptyDataset[RunLine]
     }
-    searchClauses(wc.result(), k, scorerName, pruning = pruning,
-      phraseClauses = pc.result(), expansionClauses = ec.result(),
-      blendedClauses = bc.result(), trees = trees)
+    searchClauses(Query(cb.result(), trees = trees, prune = pruning), k, scorerName)
   }
 
   /** Analyzed, expanded highlight vocabulary of a query text: terms of
@@ -849,13 +716,9 @@ final class Searcher(val index: BuiltIndex) {
     require(inputs.nonEmpty, "suggest needs at least one input term")
     require(maxEdits >= 1 && maxEdits <= 4, s"maxEdits out of range: $maxEdits")
     import spark.implicits._
-    // df of the inputs themselves: tiny bucket-pruned point lookup
-    val inBuckets = inputs.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val knownDf: Map[String, Long] = index.termStats
-      .where(col("bucket").isin(inBuckets: _*) && col("term").isin(inputs: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val knownDf = termStats(inputs)
     val active = inputs.distinct
-      .filter(t => knownDf.getOrElse(t, 0L) <= maxQueryFrequency)
+      .filter(t => knownDf.get(t).fold(0L)(_._1) <= maxQueryFrequency)
     val empty = Seq.empty[(String, String, Long, Long, Long)]
       .toDF("q", "suggestion", "dist", "df", "rank")
     if (active.isEmpty) return empty
@@ -894,29 +757,13 @@ final class Searcher(val index: BuiltIndex) {
     require(filters.map(_._1).distinct.size == filters.size,
       "duplicate filter names")
     require(filters.forall(!_._1.contains("&")), "'&' is the key separator")
-    import spark.implicits._
     val termsByName: Seq[(String, String)] = filters.map { case (n, text) =>
       val ts = analyzer.analyze(text).distinct
       require(ts.length == 1, s"filter '$n' must analyze to one term, got ${ts.toSeq}")
       (n, ts.head)
     }
-    val byTerm: Map[String, Array[String]] = termsByName.groupBy(_._2)
-      .map { case (t, xs) => t -> xs.map(_._1).toArray }
-    val buckets =
-      byTerm.keySet.map(IndexLayout.bucketOf(_, index.cfg.buckets)).toSeq
-    val bc = spark.sparkContext.broadcast(byTerm)
-    val tombL = tombstonesBc
-    val matched = index.postingsMatch
-      .where(col("bucket").isin(buckets: _*) &&
-        col("term").isin(byTerm.keys.toSeq: _*))
-      .as[PostingRun]
-      .flatMap { run =>
-        val names = bc.value(run.term)
-        PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
-          .filter(d => Searcher.liveDoc(tombL, d))
-          .flatMap(d => names.iterator.map(n => (n, d)))
-      }
-      .toDF("name", "docid").distinct()
+    val matched = matchPairs(termsByName.groupBy(_._2)
+      .map { case (t, xs) => t -> xs.map(_._1) }, "name")
     matched.as("a")
       .join(matched.as("b"),
         col("a.docid") === col("b.docid") && col("a.name") <= col("b.name"))
@@ -1000,11 +847,8 @@ final class Searcher(val index: BuiltIndex) {
     val pairs = seqs.flatMap { case (_, ws) =>
       ws.sliding(2).map(p => p.head + " " + p(1))
     }.distinct
-    val pairBuckets =
-      pairs.map(IndexLayout.bucketOf(_, shingleIdx.cfg.buckets)).distinct
-    val bigCf: Map[String, Long] = shingleIdx.termStats
-      .where(col("bucket").isin(pairBuckets: _*) && col("term").isin(pairs: _*))
-      .select("term", "cf").as[(String, Long)].collect().toMap
+    val bigCf: Map[String, Long] =
+      Searcher.termStats(shingleIdx, pairs).map { case (t, (_, cf)) => t -> cf }
     def log2(x: Double): Double = math.log(x) / math.log(2.0)
     val scoredRows = seqs.map { case (qid, ws) =>
       var score = log2(uniCf(ws.head) / totalT)
@@ -1056,13 +900,8 @@ final class Searcher(val index: BuiltIndex) {
       "span queries need a positions-enabled index (IndexConfig.indexPositions)")
     import spark.implicits._
     val scorer = Scorer.byName(scorerName)
-    val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
-    val terms = spans.flatMap(s => Seq(s._2, s._3)).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val dfs: Map[String, (Long, Long)] = index.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select("term", "df", "cf").as[(String, Long, Long)].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
+    val stats = collStats
+    val dfs = termStats(spans.flatMap(s => Seq(s._2, s._3)))
     // span index -> accumulated weight (both terms must be indexed)
     val spanArr = spans.toArray
     val weights: Map[Int, Float] = spanArr.zipWithIndex.collect {
@@ -1076,26 +915,15 @@ final class Searcher(val index: BuiltIndex) {
       .filter { case (_, si) => weights.contains(si) }
       .flatMap { case ((_, ta, tb, _), si) => Seq((ta, si, 0), (tb, si, 1)) }
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(x => (x._2, x._3)).toArray }
-    val sBuckets = slots.keys.toSeq
-      .map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val posts = index.postings
-      .where(col("bucket").isin(sBuckets: _*) &&
-        col("term").isin(slots.keys.toSeq: _*))
-      .as[graft.index.PostingRun]
-    val occ: Dataset[(Int, Long, Int, Array[Int], Int)] = posts.flatMap { run =>
+    val occ = postingsFor(index.postings, slots.keys).flatMap { run =>
       val ss = slots(run.term)
-      graft.codec.PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
+      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
           run.tf_blob, run.dl_blob, run.pos_blob)
         .flatMap { p =>
           ss.iterator.map { case (si, slot) => (si, p.docid, slot, p.pos, p.dl) }
         }
     }
-    val scorerB = scorer
-    val statsB = stats
     val tombL = tombstonesBc
-    val spanArrB = spanArr
-    val weightsB = weights
-    val orderedB = ordered
     val scored: Dataset[(String, Long, Float)] = occ
       .groupByKey(t => (t._1, t._2))
       .flatMapGroups[(String, Long, Float)] {
@@ -1110,9 +938,9 @@ final class Searcher(val index: BuiltIndex) {
         if (la == null || lb == null || !Searcher.liveDoc(tombL, key._2))
           Iterator.empty
         else {
-          val (qid, _, _, slop) = spanArrB(key._1)
+          val (qid, _, _, slop) = spanArr(key._1)
           var freq = 0.0f
-          if (orderedB) {
+          if (ordered) {
             var i = 0
             while (i < la.length) {
               val a = la(i)
@@ -1151,7 +979,7 @@ final class Searcher(val index: BuiltIndex) {
           }
           if (freq == 0.0f) Iterator.empty
           else Iterator.single((qid, key._2,
-            scorerB.score(freq, dl, weightsB(key._1), statsB)))
+            scorer.score(freq, dl, weights(key._1), stats)))
         }
       }
     collectTopK(scored, k, scorer.name)
@@ -1169,23 +997,13 @@ final class Searcher(val index: BuiltIndex) {
   def searchRescore(topics: Seq[Topic], rescoreClauses: Seq[PhraseClause],
                     window: Int, weight: Float, k: Int = 1000,
                     scorerName: String = "bm25"): Dataset[RunLine] = {
-    requireDistinctQids(topics)
     require(k <= window, s"k=$k exceeds the rescore window=$window")
     import spark.implicits._
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    val base = scoredClauses(clauses, window, scorerName)
-    val agg = new TopKAgg(window,
-      implicitly[org.apache.spark.sql.Encoder[Seq[(Long, Float)]]],
-      implicitly[org.apache.spark.sql.Encoder[Seq[(Long, Float)]]])
+    val base = scoredClauses(Query(terms(topics)), window, scorerName)
     val windowRows: Dataset[(String, Long, Float)] = base
-      .groupByKey(_._1).agg(agg.toColumn)
+      .groupByKey(_._1).agg(topK(window).toColumn)
       .flatMap { case (qid, hits) => hits.iterator.map(h => (qid, h._1, h._2)) }
-    val ph = scoredClauses(Nil, window, scorerName,
-      phraseClauses = rescoreClauses)
+    val ph = scoredClauses(Query(rescoreClauses), window, scorerName)
     val w = weight
     val rescored = windowRows.toDF("qid", "docid", "score")
       .join(ph.toDF("qid", "docid", "phscore"), Seq("qid", "docid"), "left_outer")
@@ -1212,7 +1030,6 @@ final class Searcher(val index: BuiltIndex) {
       s"tieBreaker out of [0,1]: $tieBreaker")
     import spark.implicits._
     val scorer = Scorer.byName(scorerName)
-    val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
     // one sub-query per DISTINCT analyzed term (first-occurrence order):
     // DisMaxQuery sub-queries are a set here, and the oracle's
     // `SELECT DISTINCT qid, term` replays exactly that — a repeated topic
@@ -1223,43 +1040,13 @@ final class Searcher(val index: BuiltIndex) {
         WeightedClause(t.qid, i, term, 1.0f)
       }
     }
-    val terms = clauses.map(_.term).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val dfs: Map[String, (Long, Long)] = index.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select("term", "df", "cf").as[(String, Long, Long)].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
-    val plan: Map[String, (Float, Array[(String, Int)])] =
-      clauses.groupBy(_.term).flatMap { case (term, cs) =>
-        dfs.get(term).map { case (df, cf) =>
-          term -> (scorer.termWeight(df, cf, stats),
-            cs.map(c => (c.qid, c.qidx)).toArray)
-        }
-      }
+    val plan = termPlan(clauses, termStats(clauses.map(_.term)), scorer)(_ => 1.0f)
     if (plan.isEmpty) return spark.emptyDataset[RunLine]
-    val pBuckets = plan.keys.toSeq
-      .map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val posts = index.postingsDecode
-      .where(col("bucket").isin(pBuckets: _*) &&
-        col("term").isin(plan.keys.toSeq: _*))
-      .as[graft.index.PostingRun]
-    val scorerB = scorer
-    val statsB = stats
     val tombL = tombstonesBc
     val tie = tieBreaker
-    val partials: Dataset[(String, Long, Int, Float)] = posts.flatMap { run =>
-      val (idf, cs) = plan(run.term)
-      graft.codec.PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
-          run.tf_blob, run.dl_blob)
-        .flatMap { p =>
-          if (!Searcher.liveDoc(tombL, p.docid)) Iterator.empty
-          else {
-            val s = scorerB.score(p.tf, p.dl, idf, statsB)
-            cs.iterator.map { case (qid, qidx) => (qid, p.docid, qidx, s) }
-          }
-        }
-    }
-    val scored: Dataset[(String, Long, Float)] = partials
+    val scored: Dataset[(String, Long, Float)] =
+      termPartials(postingsFor(index.postingsDecode, plan.keys), plan, scorer)
+      .filter(t => Searcher.liveDoc(tombL, t._2))
       .groupByKey(t => (t._1, t._2))
       .mapGroups[(String, Long, Float)] {
         (key: (String, Long), it: Iterator[(String, Long, Int, Float)]) =>
@@ -1282,34 +1069,14 @@ final class Searcher(val index: BuiltIndex) {
   def searchBoosting(topics: Seq[Topic], negTerms: Seq[(String, String)],
                      negativeBoost: Float, k: Int = 1000,
                      scorerName: String = "bm25"): Dataset[RunLine] = {
-    requireDistinctQids(topics)
     require(negativeBoost > 0.0f && negativeBoost < 1.0f,
       s"negativeBoost must demote, got $negativeBoost")
     import spark.implicits._
-    val clauses = topics.flatMap { t =>
-      analyzer.analyze(t.text).zipWithIndex.map { case (term, i) =>
-        WeightedClause(t.qid, i, term, 1.0f)
-      }
-    }
-    val scores = scoredClauses(clauses, k, scorerName)
-    val negByTerm: Map[String, Array[String]] =
-      negTerms.groupBy(_._2).map { case (t, qs) => t -> qs.map(_._1).distinct.toArray }
-    val negBuckets = negByTerm.keys.toSeq
-      .map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val negPosts = index.postingsDecode
-      .where(col("bucket").isin(negBuckets: _*) &&
-        col("term").isin(negByTerm.keys.toSeq: _*))
-      .as[graft.index.PostingRun]
-    val negPairs = negPosts.flatMap { run =>
-      val qids = negByTerm(run.term)
-      graft.codec.PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
-          run.tf_blob, run.dl_blob)
-        .flatMap(p => qids.iterator.map(q => (q, p.docid)))
-    }.toDF("qid", "docid").distinct() // two neg terms ⇒ one demotion, not two rows
-      .withColumn("neg", lit(true))
+    val scores = scoredClauses(Query(terms(topics)), k, scorerName)
     val nb = negativeBoost
     val demoted = scores.toDF("qid", "docid", "score")
-      .join(negPairs, Seq("qid", "docid"), "left_outer")
+      .join(negPairs(negTerms).distinct() // two neg terms ⇒ one demotion
+        .withColumn("neg", lit(true)), Seq("qid", "docid"), "left_outer")
       .select($"qid", $"docid",
         when($"neg", $"score" * nb).otherwise($"score").as("score"))
       .as[(String, Long, Float)]
@@ -1335,11 +1102,8 @@ final class Searcher(val index: BuiltIndex) {
         val exp = expandPrefix(prefix)
         if (exp.isEmpty) Nil
         else {
-          val buckets = exp.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-          val cfs: Map[String, Long] = index.termStats
-            .where(col("bucket").isin(buckets: _*) && col("term").isin(exp: _*))
-            .select("term", "cf").as[(String, Long)].collect().toMap
-          exp.flatMap(t => cfs.get(t).map(t -> _))
+          val cfs = termStats(exp)
+          exp.flatMap(t => cfs.get(t).map(t -> _._2))
             .sortBy { case (t, cf) => (-cf, t) }
             .take(topN)
             .zipWithIndex
@@ -1367,13 +1131,8 @@ final class Searcher(val index: BuiltIndex) {
       "span queries need a positions-enabled index (IndexConfig.indexPositions)")
     import spark.implicits._
     val scorer = Scorer.byName(scorerName)
-    val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
-    val terms = spans.map(_._2).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val dfs: Map[String, (Long, Long)] = index.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select("term", "df", "cf").as[(String, Long, Long)].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
+    val stats = collStats
+    val dfs = termStats(spans.map(_._2))
     // term -> [(qid, end, idf)], only for indexed terms
     val byTerm: Map[String, Array[(String, Int, Float)]] = spans
       .flatMap { case (qid, t, end) =>
@@ -1383,18 +1142,10 @@ final class Searcher(val index: BuiltIndex) {
       }
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
     if (byTerm.isEmpty) return spark.emptyDataset[RunLine]
-    val sBuckets = byTerm.keys.toSeq
-      .map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val posts = index.postings
-      .where(col("bucket").isin(sBuckets: _*) &&
-        col("term").isin(byTerm.keys.toSeq: _*))
-      .as[graft.index.PostingRun]
-    val scorerB = scorer
-    val statsB = stats
     val tombL = tombstonesBc
-    val scored: Dataset[(String, Long, Float)] = posts.flatMap { run =>
+    val scored = postingsFor(index.postings, byTerm.keys).flatMap { run =>
       val qs = byTerm(run.term)
-      graft.codec.PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
+      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob,
           run.tf_blob, run.dl_blob, run.pos_blob)
         .flatMap { p =>
           qs.iterator.flatMap { case (qid, end, idf) =>
@@ -1403,7 +1154,7 @@ final class Searcher(val index: BuiltIndex) {
             while (i < p.pos.length && p.pos(i) < end) { freq += 1; i += 1 }
             if (freq == 0 || !Searcher.liveDoc(tombL, p.docid)) Iterator.empty
             else Iterator.single(
-              (qid, p.docid, scorerB.score(freq.toFloat, p.dl, idf, statsB)))
+              (qid, p.docid, scorer.score(freq.toFloat, p.dl, idf, stats)))
           }
         }
     }
@@ -1484,114 +1235,33 @@ final class Searcher(val index: BuiltIndex) {
     base.where(col("term").rlike(s"^(?:$pattern)$$"))
   }
 
-  /** `mode = "or"` (default): disjunctive bag-of-words, the reference topic
-    * behavior. `mode = "and"`: conjunctive — only docs matching EVERY
-    * clause survive (posting-list intersection; available in the
-    * reference's SimpleQueryParser `+` syntax but unused by its batch
-    * driver, SURVEY.md §2.6). Pruning is OR-only (the seed threshold is
-    * not a valid lower bound under intersection). `negTerms` are MUST_NOT
-    * (qid, analyzed-term) pairs: matching docs are removed BEFORE ranking
-    * via a distributed anti-join of the score stream against the negated
-    * terms' postings — never a driver-side doc set, so a stop-word-scale
-    * negation can't OOM the driver at 10^12 docs.
-    *
-    * `trees` switches per-(query, doc) scoring from the flat OR/AND sum to
-    * BooleanQuery-tree evaluation ([[BoolQuery.eval]]): the gathered leaf
-    * partials (keyed by clause index) feed the query's broadcast
-    * [[BoolQuery.TreeSpec]], which decides match + score recursively —
-    * nested groups, per-node coord, MUST_NOT subtrees, and match-all
-    * constants included. Queries whose tree matches a leafless document
-    * (pure negation, explicit `*`) get the complement docs appended at the
-    * empty-document constant score via [[complementTail]] — a k-bounded
-    * early-terminating scan of the grp-partitioned doc table in ascending
-    * docid order (constant score + docid-asc tie-break mean only the k
-    * smallest surviving docids can ever rank). Tree mode requires
-    * `mode = "or"` and no `negTerms` (the tree carries its own
-    * negations). WAND pruning stays on per-query for SHOULD-only term
-    * trees ([[BoolQuery.prunableShape]]) and auto-disables for the rest.
+  /** Top-k retrieval for a [[Query]] — the seam every scored entry point
+    * runs through: the [[scoredClauses]] stream, then the bounded collector
+    * and docno attach ([[collectTopK]]). `k` also sizes WAND's seed θ and
+    * the match-all complement tail.
     */
-  def searchClauses(clauses: Seq[WeightedClause], k: Int = 1000,
-                    scorerName: String = "bm25",
-                    excludeDocnos: Map[String, Set[String]] = Map.empty,
-                    pruning: Boolean = false,
-                    mode: String = "or",
-                    negTerms: Seq[(String, String)] = Nil,
-                    phraseClauses: Seq[PhraseClause] = Nil,
-                    expansionClauses: Seq[ExpansionClause] = Nil,
-                    blendedClauses: Seq[BlendedClause] = Nil,
-                    synonymClauses: Seq[SynonymClause] = Nil,
-                    trees: Map[String, BoolQuery.TreeSpec] = Map.empty,
-                    collapseKeys: Option[DataFrame] = None,
-                    filterDocids: Option[DataFrame] = None,
-                    minShouldMatch: Int = 0)
-      : Dataset[RunLine] =
-    collectTopK(
-      scoredClauses(clauses, k, scorerName, excludeDocnos, pruning, mode,
-        negTerms, phraseClauses, expansionClauses, blendedClauses,
-        synonymClauses, trees, collapseKeys, filterDocids, minShouldMatch),
-      k, Scorer.byName(scorerName).name)
+  def searchClauses(query: Query, k: Int = 1000,
+                    scorerName: String = "bm25"): Dataset[RunLine] =
+    collectTopK(scoredClauses(query, k, scorerName), k,
+      Scorer.byName(scorerName).name)
 
   /** The full scored candidate stream (qid, docid, score) BEFORE the top-k
     * collector — the seam multi-field retrieval combines per-field scores
     * on ([[MultiField]]); parameters as [[searchClauses]].
     */
-  private[graft] def scoredClauses(clauses: Seq[WeightedClause],
-                    k: Int = 1000,
-                    scorerName: String = "bm25",
-                    excludeDocnos: Map[String, Set[String]] = Map.empty,
-                    pruning: Boolean = false,
-                    mode: String = "or",
-                    negTerms: Seq[(String, String)] = Nil,
-                    phraseClauses: Seq[PhraseClause] = Nil,
-                    expansionClauses: Seq[ExpansionClause] = Nil,
-                    blendedClauses: Seq[BlendedClause] = Nil,
-                    synonymClauses: Seq[SynonymClause] = Nil,
-                    trees: Map[String, BoolQuery.TreeSpec] = Map.empty,
-                    collapseKeys: Option[DataFrame] = None,
-                    filterDocids: Option[DataFrame] = None,
-                    minShouldMatch: Int = 0)
+  private[graft] def scoredClauses(query: Query, k: Int = 1000,
+                                   scorerName: String = "bm25")
       : Dataset[(String, Long, Float)] = {
     import spark.implicits._
-    val scorer = Scorer.byName(scorerName)
-    // minimumNumberShouldMatch (≙ BooleanQuery.setMinimumNumberShouldMatch):
-    // flat-OR only — a tree carries its own occurs, AND already requires
-    // all, and WAND's seed θ is computed over the UNfiltered stream, so a
-    // doc the msm gate later removes could have seeded a θ that overshoots
-    // the true (post-gate) kth score — pruning would be unsound.
-    require(minShouldMatch == 0 ||
-        (mode == "or" && trees.isEmpty && !pruning),
-      "minShouldMatch requires flat OR mode without trees or pruning")
-    if (clauses.isEmpty && phraseClauses.isEmpty && expansionClauses.isEmpty &&
-        blendedClauses.isEmpty && synonymClauses.isEmpty && trees.isEmpty)
+    query.requireRunnableOn(index)
+    val Query(clauses, mode, trees, negTerms, excludeDocnos, filter, collapse,
+      minShouldMatch, pruning) = query
+    if (clauses.isEmpty && trees.isEmpty)
       return spark.emptyDataset[(String, Long, Float)]
-    require(phraseClauses.isEmpty || index.cfg.indexPositions,
-      "phrase clauses need a positions-enabled index (IndexConfig.indexPositions)")
-    // MultiPhraseQuery union slots (several terms sharing one offset —
-    // match_phrase_prefix's expanded last slot): exact matching unions the
-    // slot's position lists; the sloppy event walk pins repeats by TERM
-    // identity per slot, which a union slot has no single answer for.
-    require(phraseClauses.forall(pc =>
-        pc.slop == 0 || pc.terms.map(_._2).distinct.size == pc.terms.size),
-      "slot alternatives (MultiPhraseQuery union slots) require slop == 0")
-    require(trees.isEmpty || (mode == "or" && negTerms.isEmpty),
-      "tree evaluation carries its own boolean structure: use mode=or and no negTerms")
-    require(collapseKeys.isEmpty || !pruning,
-      "field collapse cannot prune: WAND's seed θ bounds the global kth " +
-        "score, but a collapse key's winner may rank anywhere")
-    require(filterDocids.isEmpty || !pruning,
-      "attribute filters cannot prune: the seed pass computes θ over the " +
-        "UNfiltered stream, so the filtered kth score may sit in a " +
-        "block the overshooting θ skipped")
-    if (trees.nonEmpty) {
-      // fail at the driver, not as an executor-side lookup miss at job time
-      val uncovered = (clauses.map(_.qid) ++ phraseClauses.map(_.qid) ++
-        expansionClauses.map(_.qid) ++ blendedClauses.map(_.qid) ++
-        synonymClauses.map(_.qid))
-        .distinct.filterNot(trees.contains)
-      require(uncovered.isEmpty,
-        s"clauses reference qids without a TreeSpec: ${uncovered.mkString(", ")}")
-    }
-    val conjunctive = mode == "and"
+    val scorer = Scorer.byName(scorerName)
+    val conjunctive = mode == Mode.And
+    val stats = collStats
+    val weighted = clauses.collect { case w: WeightedClause => w }
     // Pruning is sound per-QUERY only for pure disjunctive term scoring:
     // exclusions (MUST_NOT terms or excluded docnos) remove docs AFTER the
     // seed pass computed θ over the un-excluded stream, and phrase/
@@ -1607,92 +1277,58 @@ final class Searcher(val index: BuiltIndex) {
     // MUST_NOT / match-all / coord can reject or re-weight subsets, and
     // those trees remain unprunable.
     val unprunableQids: Set[String] =
-      (phraseClauses.map(_.qid) ++ expansionClauses.map(_.qid) ++
-        blendedClauses.map(_.qid) ++ synonymClauses.map(_.qid) ++
-        negTerms.map(_._1) ++
-        excludeDocnos.keys ++
+      (clauses.filterNot(_.isInstanceOf[WeightedClause]).map(_.qid) ++
+        negTerms.map(_._1) ++ excludeDocnos.keys ++
         trees.collect { case (qid, ts) if !BoolQuery.prunableShape(ts.root) => qid }).toSet
     val pruneQids: Set[String] =
       if (!pruning || !scorer.supportsPruning || conjunctive) Set.empty
-      else clauses.map(_.qid).filterNot(unprunableQids).toSet
+      else weighted.map(_.qid).filterNot(unprunableQids).toSet
     val prune = pruneQids.nonEmpty
 
-    // Resolve excluded docnos → docids (tiny point lookup on the doc table,
-    // ≙ the reference's docno TermQuery lookups §2.3).
     val excludedByQid: Map[String, Set[Long]] =
       if (excludeDocnos.isEmpty) Map.empty
       else {
-        val allDocnos = excludeDocnos.values.flatten.toSeq.distinct
-        val ids = index.docs.where(col("docno").isin(allDocnos: _*))
-          .select("docno", "docid").as[(String, Long)].collect().toMap
+        val ids = docidLookup(excludeDocnos.values.flatten.toSeq)
         excludeDocnos.map { case (qid, ds) => qid -> ds.flatMap(ids.get) }
       }
 
-    val phraseTerms = phraseClauses.flatMap(_.terms.map(_._1)).distinct
-    val blendTerms = blendedClauses.flatMap(_.terms.map(_._1)).distinct
-    val synTerms = synonymClauses.flatMap(_.terms).distinct
-    val terms =
-      (clauses.map(_.term) ++ phraseTerms ++ blendTerms ++ synTerms).distinct
-    val buckets = terms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-    val stats = CollStats(index.stats.max_doc, index.stats.sum_total_term_freq)
-
-    // Per-term (docFreq, collectionFreq) from the tiny pruned term_stats
-    // lookup (≙ TermStatistics consumed at `BM25.java:61`), memoized per
-    // searcher — an index is immutable, so repeated topics skip the job.
-    val missing = terms.filterNot(statsCache.contains)
-    if (missing.nonEmpty) {
-      val missingBuckets = missing.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-      index.termStats
-        .where(col("bucket").isin(missingBuckets: _*) && col("term").isin(missing: _*))
-        .select("term", "df", "cf").as[(String, Long, Long)].collect()
-        .foreach(t => statsCache.put(t._1, Some((t._2, t._3))))
-      missing.foreach(t => statsCache.putIfAbsent(t, None)) // negative cache
+    // (df, cf) of every scored term (expansion clauses score a constant).
+    val dfs = termStats(clauses.flatMap {
+      case w: WeightedClause => Seq(w.term)
+      case p: PhraseClause => p.terms.map(_._1)
+      case _: ExpansionClause => Nil
+      case b: BlendedClause => b.terms.map(_._1)
+      case s: SynonymClause => s.terms
+    }.distinct)
+    // Clause weights. Phrase: the reference's accumulate-from-1.0
+    // multi-stats branch (`BM25.java:57,64-68`), duplicated phrase terms
+    // included. Blended (≙ BlendedTermQuery.adjustFrequencies): one idf
+    // from the MAX df (and max cf) across the clause's indexed terms.
+    // Synonym (≙ SynonymQuery.SynonymWeight's merged TermStatistics): max
+    // docFreq, summed collectionFreq. Expansion: constant.
+    def merged(ts: Seq[String], cf: Seq[Long] => Long): Float = {
+      val present = ts.flatMap(dfs.get)
+      if (present.isEmpty) 0.0f
+      else scorer.termWeight(present.map(_._1).max, cf(present.map(_._2)), stats)
     }
-    val dfs: Map[String, (Long, Long)] =
-      terms.flatMap(t => statsCache.get(t).flatten.map(t -> _)).toMap
+    def weight(c: Clause): Float = c match {
+      case w: WeightedClause =>
+        val (df, cf) = dfs.getOrElse(w.term, (0L, 0L))
+        scorer.termWeight(df, cf, stats)
+      case p: PhraseClause =>
+        scorer.phraseWeight(p.terms.map(t => dfs.getOrElse(t._1, (0L, 0L))), stats)
+      case _: ExpansionClause => 1.0f
+      case b: BlendedClause => merged(b.terms.map(_._1), _.max)
+      case s: SynonymClause => merged(s.terms, _.sum)
+    }
 
     // Per-query normalization (1.0 for all reference models, which override
     // queryNorm — only classic TF-IDF uses it): sumOfSquaredWeights over
     // ALL clauses, including unmatched terms, like Lucene's weight phase.
-    // phrase clause weight = the reference's accumulate-from-1.0 multi-stats
-    // branch (`BM25.java:57,64-68`), duplicated phrase terms included
-    val phraseWeights: Map[(String, Int), Float] = phraseClauses.map { pc =>
-      (pc.qid, pc.qidx) ->
-        scorer.phraseWeight(pc.terms.map(t => dfs.getOrElse(t._1, (0L, 0L))), stats)
-    }.toMap
-
-    // Blended per-clause term weight (≙ BlendedTermQuery.adjustFrequencies):
-    // one idf from the MAX df (and max cf) across the clause's expanded
-    // terms that exist in the index.
-    val blendWeights: Map[(String, Int), Float] = blendedClauses.map { bc =>
-      val present = bc.terms.flatMap(t => dfs.get(t._1))
-      (bc.qid, bc.qidx) -> (if (present.isEmpty) 0.0f
-        else scorer.termWeight(present.map(_._1).max, present.map(_._2).max, stats))
-    }.toMap
-
-    // Synonym pseudo-term weight (≙ SynonymQuery.SynonymWeight's merged
-    // TermStatistics): max docFreq, summed collectionFreq over the group's
-    // indexed members.
-    val synWeights: Map[(String, Int), Float] = synonymClauses.map { sc =>
-      val present = sc.terms.flatMap(t => dfs.get(t))
-      (sc.qid, sc.qidx) -> (if (present.isEmpty) 0.0f
-        else scorer.termWeight(present.map(_._1).max, present.map(_._2).sum, stats))
-    }.toMap
-
     // Tree mode mirrors Lucene's BooleanWeight recursion: prohibited
     // (MUST_NOT-subtree) clauses never contribute to the norm sum, and each
     // scoring match-all node contributes weight 1.
-    val normEntries: Seq[(String, Int, Float)] =
-      (clauses.map(c => (c.qid, c.qidx, {
-        val (df, cf) = dfs.getOrElse(c.term, (0L, 0L))
-        scorer.termWeight(df, cf, stats) * c.boost
-      })) ++ phraseClauses.map(pc =>
-        (pc.qid, pc.qidx, phraseWeights((pc.qid, pc.qidx)) * pc.boost)) ++
-        expansionClauses.map(e => (e.qid, e.qidx, e.boost)) ++ // constant weight
-        blendedClauses.map(bc =>
-          (bc.qid, bc.qidx, blendWeights((bc.qid, bc.qidx)) * bc.boost)) ++
-        synonymClauses.map(sc =>
-          (sc.qid, sc.qidx, synWeights((sc.qid, sc.qidx)) * sc.boost)))
+    val normEntries = clauses.map(c => (c.qid, c.qidx, weight(c) * c.boost))
     val qnByQid: Map[String, Float] =
       (if (trees.isEmpty) normEntries
        else normEntries.filterNot { case (qid, qidx, _) =>
@@ -1704,59 +1340,47 @@ final class Searcher(val index: BuiltIndex) {
         qid -> scorer.queryNorm(ws.sortBy(_._2).map(_._3))
       }
     val maxOverlap: Map[String, Int] =
-      (clauses.map(c => (c.qid, c.qidx)) ++
-        phraseClauses.map(pc => (pc.qid, pc.qidx)) ++
-        expansionClauses.map(e => (e.qid, e.qidx)) ++
-        blendedClauses.map(bc => (bc.qid, bc.qidx)) ++
-        synonymClauses.map(sc => (sc.qid, sc.qidx)))
-        .groupBy(_._1).map { case (q, cs) => q -> cs.size }
+      clauses.groupBy(_.qid).map { case (q, cs) => q -> cs.size }
 
-    // AND mode: a query with any unindexed clause term (or phrase term, or
-    // empty expansion) can match nothing.
+    // AND mode: a query with any clause that can match nothing (unindexed
+    // term or phrase term, empty expansion, no indexed blended/synonym
+    // member) matches nothing. Live blended/synonym clauses keep only
+    // their indexed members.
     val deadQids: Set[String] =
       if (!conjunctive) Set.empty
-      else (clauses.groupBy(_.qid)
-        .collect { case (q, cs) if cs.exists(c => !dfs.contains(c.term)) => q } ++
-        phraseClauses.groupBy(_.qid)
-          .collect { case (q, ps) if ps.exists(_.terms.exists(t => !dfs.contains(t._1))) => q } ++
-        expansionClauses.groupBy(_.qid)
-          .collect { case (q, es) if es.exists(_.terms.isEmpty) => q } ++
-        blendedClauses.groupBy(_.qid)
-          .collect { case (q, bs) if bs.exists(_.terms.forall(t => !dfs.contains(t._1))) => q } ++
-        synonymClauses.groupBy(_.qid)
-          .collect { case (q, ss) if ss.exists(_.terms.forall(t => !dfs.contains(t))) => q })
-        .toSet
-    val liveClauses = clauses.filterNot(c => deadQids(c.qid))
-    val livePhrases = phraseClauses.filterNot(pc => deadQids(pc.qid))
-    val liveExpansions = expansionClauses
-      .filterNot(e => deadQids(e.qid)).filter(_.terms.nonEmpty)
-    val liveBlended = blendedClauses.filterNot(bc => deadQids(bc.qid))
-      .map(bc => bc.copy(terms = bc.terms.filter(t => dfs.contains(t._1))))
-      .filter(_.terms.nonEmpty)
-    val liveSynonyms = synonymClauses.filterNot(sc => deadQids(sc.qid))
-      .map(sc => sc.copy(terms = sc.terms.filter(dfs.contains)))
-      .filter(_.terms.nonEmpty)
+      else clauses.filterNot {
+        case w: WeightedClause => dfs.contains(w.term)
+        case p: PhraseClause => p.terms.forall(t => dfs.contains(t._1))
+        case e: ExpansionClause => e.terms.nonEmpty
+        case b: BlendedClause => b.terms.exists(t => dfs.contains(t._1))
+        case s: SynonymClause => s.terms.exists(dfs.contains)
+      }.map(_.qid).toSet
+    val live: Seq[Clause] = clauses.filterNot(c => deadQids(c.qid)).flatMap {
+      case e: ExpansionClause => Some(e).filter(_.terms.nonEmpty)
+      case b: BlendedClause =>
+        Some(b.copy(terms = b.terms.filter(t => dfs.contains(t._1)))).filter(_.terms.nonEmpty)
+      case s: SynonymClause =>
+        Some(s.copy(terms = s.terms.filter(dfs.contains))).filter(_.terms.nonEmpty)
+      case c => Some(c)
+    }
+    val livePhrases = live.collect { case p: PhraseClause => p }
+    val liveExpansions = live.collect { case e: ExpansionClause => e }
+    val liveBlended = live.collect { case b: BlendedClause => b }
+    val liveSynonyms = live.collect { case s: SynonymClause => s }
 
     // Driver-side query plan: term → (idf, clauses using it), queryNorm
     // folded into the clause boost.
-    val plan: Map[String, (Float, Array[(String, Int, Float)])] =
-      liveClauses.groupBy(_.term).flatMap { case (term, cs) =>
-        dfs.get(term).map { case (df, cf) =>
-          term -> (scorer.termWeight(df, cf, stats),
-                   cs.map(c => (c.qid, c.qidx, c.boost * qnByQid(c.qid))).toArray)
-        }
-      }
-    if (plan.isEmpty && livePhrases.isEmpty && liveExpansions.isEmpty &&
-        liveBlended.isEmpty && liveSynonyms.isEmpty &&
+    val plan = termPlan(live.collect { case w: WeightedClause => w }, dfs,
+      scorer)(c => c.boost * qnByQid(c.qid))
+    if (plan.isEmpty && live.forall(_.isInstanceOf[WeightedClause]) &&
         trees.isEmpty) // a tree may still match-all
       return spark.emptyDataset[(String, Long, Float)]
 
     // Postings lookup: bucket prunes parquet partitions, term pushes
     // down. Only the WAND main pass reads block metadata — the exhaustive
     // decode drops those columns from the scan too (postingsDecode).
-    val posts = (if (prune) index.postingsScoring else index.postingsDecode)
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(plan.keys.toSeq: _*))
-      .as[PostingRun]
+    val posts = postingsFor(
+      if (prune) index.postingsScoring else index.postingsDecode, plan.keys)
 
     // Block-max WAND (north-star extension, SURVEY.md §2.7): a seed pass
     // scores each query's cheapest (lowest-df) clause exactly, giving a
@@ -1764,14 +1388,13 @@ final class Searcher(val index: BuiltIndex) {
     // (query, term, block) whose upper bound — block-max tf at block-min dl
     // plus the other clauses' global maxima — cannot strictly beat θ.
     // Sound because scores are monotone ↑tf ↓dl and pruning is strict (<).
+    val pruneClauses = weighted.filter(c => pruneQids(c.qid))
     val theta: Map[String, Float] =
       if (!prune) Map.empty
-      else seedThresholds(clauses.filter(c => pruneQids(c.qid)), dfs, k,
-        scorer, stats, qnByQid)
+      else seedThresholds(pruneClauses, dfs, k, scorer, stats, qnByQid)
     val (boostSum, othersSum) =
       if (!prune || theta.isEmpty) (Map.empty[(String, String), Float], Map.empty[(String, String), Float])
-      else wandBounds(posts, plan, clauses.filter(c => pruneQids(c.qid)),
-        qnByQid, scorer, stats)
+      else wandBounds(posts, plan, pruneClauses, qnByQid, scorer, stats)
 
     val decodedAcc = spark.sparkContext.longAccumulator("wand_blocks_decoded")
     val prunedAcc = spark.sparkContext.longAccumulator("wand_blocks_pruned")
@@ -1781,16 +1404,8 @@ final class Searcher(val index: BuiltIndex) {
     // clause boost multiplies like a Lucene query-term boost.
     val partials: Dataset[(String, Long, Int, Float)] =
       if (plan.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else if (!prune || theta.isEmpty) posts.flatMap { run =>
-        val (idf, cs) = plan(run.term)
-        PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-          .flatMap { p =>
-            val s = scorer.score(p.tf, p.dl, idf, stats)
-            cs.iterator.map { case (qid, qidx, boost) =>
-              (qid, p.docid, qidx, if (boost == 1.0f) s else s * boost)
-            }
-          }
-      } else posts.flatMap { run =>
+      else if (!prune || theta.isEmpty) termPartials(posts, plan, scorer)
+      else posts.flatMap { run =>
         val (idf, cs) = plan(run.term)
         val nBlocks = run.block_last_docid.length
         (0 until nBlocks).iterator.flatMap { bi =>
@@ -1826,25 +1441,21 @@ final class Searcher(val index: BuiltIndex) {
     // distributed analog of Lucene's ExactPhraseScorer), score phraseFreq
     // against the accumulated multi-term weight. One extra shuffle, paid
     // only by queries that contain phrases.
-    val phrasePartials: Dataset[(String, Long, Int, Float)] =
-      if (livePhrases.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else {
-        val phArr = livePhrases.toArray
+    val phrasePartials: Option[Dataset[(String, Long, Int, Float)]] =
+      if (livePhrases.isEmpty) None
+      else Some {
+        // (phrase, weight, queryNorm-folded boost), resolved on the driver
+        val phArr = livePhrases.map(pc => (pc, weight(pc), pc.boost * qnByQid(pc.qid))).toArray
         // slot = DISTINCT offset (ascending): several terms sharing an
         // offset form one union slot (≙ MultiPhraseQuery.add(Term[], pos));
         // with unique offsets this degenerates to the plain phrase layout
         val termSlots: Map[String, Array[(Int, Int)]] =
-          phArr.zipWithIndex.toSeq.flatMap { case (pc, pi) =>
+          phArr.zipWithIndex.toSeq.flatMap { case ((pc, _, _), pi) =>
             val offsU = pc.terms.map(_._2).distinct.sorted
             pc.terms.map { case (term, off) => (term, pi, offsU.indexOf(off)) }
           }.distinct
             .groupBy(_._1).map { case (t, xs) => t -> xs.map(x => (x._2, x._3)).toArray }
-        val pTerms = termSlots.keys.toSeq
-        val pBuckets = pTerms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val pPosts = index.postings
-          .where(col("bucket").isin(pBuckets: _*) && col("term").isin(pTerms: _*))
-          .as[PostingRun]
-        val occ: Dataset[(Int, Long, Int, Array[Int], Int)] = pPosts.flatMap { run =>
+        val occ = postingsFor(index.postings, termSlots.keys).flatMap { run =>
           val slots = termSlots(run.term)
           PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob,
               run.dl_blob, run.pos_blob)
@@ -1852,14 +1463,10 @@ final class Searcher(val index: BuiltIndex) {
               slots.iterator.map { case (pi, si) => (pi, p.docid, si, p.pos, p.dl) }
             }
         }
-        val weights = phraseWeights
-        val qnB = qnByQid
-        val scorerB = scorer
-        val statsB = stats
         occ.groupByKey(t => (t._1, t._2))
           .flatMapGroups[(String, Long, Int, Float)] {
             (key: (Int, Long), it: Iterator[(Int, Long, Int, Array[Int], Int)]) =>
-            val pc = phArr(key._1)
+            val (pc, w, boost) = phArr(key._1)
             val offsU = pc.terms.map(_._2).distinct.sorted
             val nSlots = offsU.length
             val posBySlot = new Array[Array[Int]](nSlots)
@@ -1912,8 +1519,7 @@ final class Searcher(val index: BuiltIndex) {
               }
               if (freq == 0.0f) Iterator.empty
               else {
-                val boost = pc.boost * qnB(pc.qid)
-                val sc = scorerB.score(freq, dl, weights((pc.qid, pc.qidx)), statsB)
+                val sc = scorer.score(freq, dl, w, stats)
                 Iterator.single((pc.qid, key._2, pc.qidx,
                   if (boost == 1.0f) sc else sc * boost))
               }
@@ -1923,18 +1529,13 @@ final class Searcher(val index: BuiltIndex) {
     // Expansion clause partials (CONSTANT_SCORE): decode the expanded
     // terms' postings; a doc matching several expanded terms of one clause
     // still scores the boost ONCE (distinct on the identical partial rows).
-    val expPartials: Dataset[(String, Long, Int, Float)] =
-      if (liveExpansions.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else {
+    val expPartials: Option[Dataset[(String, Long, Int, Float)]] =
+      if (liveExpansions.isEmpty) None
+      else Some {
         val byTerm: Map[String, Array[(String, Int, Float)]] = liveExpansions
           .flatMap(e => e.terms.map(t => (t, (e.qid, e.qidx, e.boost * qnByQid(e.qid)))))
           .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
-        val eTerms = byTerm.keys.toSeq
-        val eBuckets = eTerms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val ePosts = index.postingsDecode
-          .where(col("bucket").isin(eBuckets: _*) && col("term").isin(eTerms: _*))
-          .as[PostingRun]
-        ePosts.flatMap { run =>
+        postingsFor(index.postingsDecode, byTerm.keys).flatMap { run =>
           val cs = byTerm(run.term)
           PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
             .flatMap(p => cs.iterator.map { case (qid, qidx, b) => (qid, p.docid, qidx, b) })
@@ -1947,30 +1548,23 @@ final class Searcher(val index: BuiltIndex) {
     // them in deterministic expansion order (one extra tiny shuffle, paid
     // only by fuzzy queries, so the per-(qid, doc, clause) float sum is
     // reproducible regardless of posting-run arrival order).
-    val blendedPartials: Dataset[(String, Long, Int, Float)] =
-      if (liveBlended.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else {
+    val blendedPartials: Option[Dataset[(String, Long, Int, Float)]] =
+      if (liveBlended.isEmpty) None
+      else Some {
         // term -> [(qid, qidx, expansionRank, blendedIdf, fullBoost)]
         val byTerm: Map[String, Array[(String, Int, Int, Float, Float)]] =
           liveBlended.flatMap { bc =>
-            val w = blendWeights((bc.qid, bc.qidx))
+            val w = weight(bc)
             bc.terms.zipWithIndex.map { case ((term, fb), r) =>
               (term, (bc.qid, bc.qidx, r, w, fb * bc.boost * qnByQid(bc.qid)))
             }
           }.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
-        val bTerms = byTerm.keys.toSeq
-        val bBuckets = bTerms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val bPosts = index.postingsDecode
-          .where(col("bucket").isin(bBuckets: _*) && col("term").isin(bTerms: _*))
-          .as[PostingRun]
-        val scorerB = scorer
-        val statsB = stats
-        bPosts.flatMap { run =>
+        postingsFor(index.postingsDecode, byTerm.keys).flatMap { run =>
           val cs = byTerm(run.term)
           PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
             .flatMap { p =>
               cs.iterator.map { case (qid, qidx, r, w, boost) =>
-                (qid, p.docid, qidx, r, scorerB.score(p.tf, p.dl, w, statsB) * boost)
+                (qid, p.docid, qidx, r, scorer.score(p.tf, p.dl, w, stats) * boost)
               }
             }
         }
@@ -1989,23 +1583,16 @@ final class Searcher(val index: BuiltIndex) {
     // apply the scorer's TF saturation ONCE against the blended weight
     // (≙ SynonymScorer: one freq, one similarity call). One extra tiny
     // shuffle, paid only by queries that carry synonym groups.
-    val synPartials: Dataset[(String, Long, Int, Float)] =
-      if (liveSynonyms.isEmpty) spark.emptyDataset[(String, Long, Int, Float)]
-      else {
+    val synPartials: Option[Dataset[(String, Long, Int, Float)]] =
+      if (liveSynonyms.isEmpty) None
+      else Some {
         val byTerm: Map[String, Array[(String, Int)]] = liveSynonyms
           .flatMap(sc => sc.terms.map(t => (t, (sc.qid, sc.qidx))))
           .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toArray }
-        val synBoost: Map[(String, Int), Float] = liveSynonyms
-          .map(sc => (sc.qid, sc.qidx) -> sc.boost * qnByQid(sc.qid)).toMap
-        val sTerms = byTerm.keys.toSeq
-        val sBuckets = sTerms.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val sPosts = index.postingsDecode
-          .where(col("bucket").isin(sBuckets: _*) && col("term").isin(sTerms: _*))
-          .as[PostingRun]
-        val weights = synWeights
-        val scorerB = scorer
-        val statsB = stats
-        sPosts.flatMap { run =>
+        // (qid, qidx) → (weight, queryNorm-folded boost)
+        val synW: Map[(String, Int), (Float, Float)] = liveSynonyms
+          .map(sc => (sc.qid, sc.qidx) -> ((weight(sc), sc.boost * qnByQid(sc.qid)))).toMap
+        postingsFor(index.postingsDecode, byTerm.keys).flatMap { run =>
           val cs = byTerm(run.term)
           PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
             .flatMap { p =>
@@ -2018,30 +1605,20 @@ final class Searcher(val index: BuiltIndex) {
             var tf = 0
             var dl = 0
             it.foreach { r => tf += r._4; dl = r._5 }
-            val boost = synBoost((key._1, key._3))
-            val sc = scorerB.score(tf.toFloat, dl, weights((key._1, key._3)), statsB)
+            val (w, boost) = synW((key._1, key._3))
+            val sc = scorer.score(tf.toFloat, dl, w, stats)
             (key._1, key._2, key._3, if (boost == 1.0f) sc else sc * boost)
         }
       }
 
-    val allPartials = Seq(
-      Some(partials),
-      if (livePhrases.isEmpty) None else Some(phrasePartials),
-      if (liveExpansions.isEmpty) None else Some(expPartials),
-      if (liveBlended.isEmpty) None else Some(blendedPartials),
-      if (liveSynonyms.isEmpty) None else Some(synPartials)
-    ).flatten.reduce(_ union _)
+    val allPartials = (partials +: Seq(phrasePartials, expPartials,
+      blendedPartials, synPartials).flatten).reduce(_ union _)
 
     // Per-(query, doc) scoring. Flat mode: float sum in clause order
     // (≙ boolean scorer sum) with optional require-all and top-level coord.
     // Tree mode: BooleanQuery-faithful recursive evaluation of the query's
     // broadcast tree over the gathered (clause → score) map — queryNorm
     // folded into the match-all constants here, per-node coord inside eval.
-    val excluded = excludedByQid
-    val maxOv = maxOverlap
-    val requireAll = conjunctive
-    val msm = minShouldMatch
-    val scorerB = scorer
     val treeEval: Map[String, BoolQuery.EvalNode] =
       trees.map { case (qid, ts) =>
         qid -> BoolQuery.foldQueryNorm(ts.root, qnByQid.getOrElse(qid, 1.0f))
@@ -2049,7 +1626,7 @@ final class Searcher(val index: BuiltIndex) {
     val tombL = tombstonesBc
     val filtered = allPartials
       .filter(t => Searcher.liveDoc(tombL, t._2) &&
-        excluded.get(t._1).forall(!_.contains(t._2)))
+        excludedByQid.get(t._1).forall(!_.contains(t._2)))
     // Tree mode keeps the NaN (no-match) rows in `evaluated`: the match-all
     // complement below needs the full candidate set. When a complement WILL
     // be taken (computed up front from the trees' empty-document scores),
@@ -2072,7 +1649,7 @@ final class Searcher(val index: BuiltIndex) {
             val m = new scala.collection.mutable.HashMap[Int, Float]()
             it.foreach(r => m.update(r._3, m.getOrElse(r._3, 0.0f) + r._4))
             val s = BoolQuery.eval(treeEval(key._1),
-              q => m.getOrElse(q, Float.NaN), scorerB.coord)
+              q => m.getOrElse(q, Float.NaN), scorer.coord)
             (key._1, key._2, s)
           }
         if (complementQids.isEmpty) ev else ev.localCheckpoint(eager = false)
@@ -2085,17 +1662,18 @@ final class Searcher(val index: BuiltIndex) {
           (key: (String, Long), it: Iterator[(String, Long, Int, Float)]) =>
           val arr = it.toArray.sortBy(_._3)
           // distinct matched clauses: AND needs all of them, msm needs at
-          // least `msm` of them (score stays the plain sum over matches —
-          // bm25's coord is 1, like Lucene's BooleanWeight without coord)
+          // least `minShouldMatch` of them (score stays the plain sum over
+          // matches — bm25's coord is 1, like Lucene's BooleanWeight
+          // without coord)
           val nMatched = arr.iterator.map(_._3).toSet.size
           val needed =
-            if (requireAll) maxOv.getOrElse(key._1, 0) else msm
+            if (conjunctive) maxOverlap.getOrElse(key._1, 0) else minShouldMatch
           if (nMatched < needed) {
             (key._1, key._2, Float.NaN) // dropped below
           } else {
             var s = 0.0f
             arr.foreach(s += _._4)
-            val c = scorer.coord(arr.length, maxOv.getOrElse(key._1, arr.length))
+            val c = scorer.coord(arr.length, maxOverlap.getOrElse(key._1, arr.length))
             (key._1, key._2, if (c == 1.0f) s else s * c)
           }
         }
@@ -2111,38 +1689,24 @@ final class Searcher(val index: BuiltIndex) {
     // topic, not N corpus scans.
     val scoresWithComplement: Dataset[(String, Long, Float)] =
       if (complementQids.isEmpty) scores
-      else scores union complementTail(complementQids, evaluated, excluded, k)
+      else scores union complementTail(complementQids, evaluated, excludedByQid, k)
 
     // MUST_NOT terms (a true sibling MUST_NOT clause in one BooleanQuery —
     // the programmatic hard exclusion, unlike SimpleQueryParser's `-`
-    // match-all wrap): decode the negated terms' postings into (qid, docid)
-    // pairs and anti-join the score stream — excluded docs never reach the
-    // collector (ranks close up, unlike the post-hoc feedback filter).
+    // match-all wrap): anti-join the score stream against the negated
+    // terms' (qid, docid) pairs — excluded docs never reach the collector
+    // (ranks close up, unlike the post-hoc feedback filter).
     val scoresKept: Dataset[(String, Long, Float)] =
       if (negTerms.isEmpty) scoresWithComplement
-      else {
-        val negByTerm: Map[String, Array[String]] =
-          negTerms.groupBy(_._2).map { case (t, qs) => t -> qs.map(_._1).distinct.toArray }
-        val negTermSeq = negByTerm.keys.toSeq
-        val negBuckets = negTermSeq.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
-        val negPosts = index.postingsDecode
-          .where(col("bucket").isin(negBuckets: _*) && col("term").isin(negTermSeq: _*))
-          .as[PostingRun]
-        val negPairs = negPosts.flatMap { run =>
-          val qids = negByTerm(run.term)
-          PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-            .flatMap(p => qids.iterator.map(q => (q, p.docid)))
-        }.toDF("qid", "docid")
-        scoresWithComplement.toDF("qid", "docid", "score")
-          .join(negPairs, Seq("qid", "docid"), "left_anti")
-          .as[(String, Long, Float)]
-      }
+      else scoresWithComplement.toDF("qid", "docid", "score")
+        .join(negPairs(negTerms), Seq("qid", "docid"), "left_anti")
+        .as[(String, Long, Float)]
 
     // Attribute filter (≙ a BooleanQuery FILTER clause over a doc-values
     // field — code search's "lang:java" facet): a semi-join removes
     // non-matching candidates BEFORE collapse and the collector, so ranks
     // close up. Scoring is untouched (FILTER clauses don't score).
-    val scoresFiltered: Dataset[(String, Long, Float)] = filterDocids match {
+    val scoresFiltered: Dataset[(String, Long, Float)] = filter match {
       case None => scoresKept
       case Some(f) =>
         scoresKept.toDF("qid", "docid", "score")
@@ -2159,7 +1723,7 @@ final class Searcher(val index: BuiltIndex) {
     // lexicographic struct max = highest score then smallest docid — with
     // map-side partial aggregation, so the (qid, key) shuffle moves one
     // row per key per partition, not the candidate stream.
-    val scoresCollapsed: Dataset[(String, Long, Float)] = collapseKeys match {
+    collapse match {
       case None => scoresFiltered
       case Some(keys) =>
         scoresFiltered.toDF("qid", "docid", "score")
@@ -2169,8 +1733,71 @@ final class Searcher(val index: BuiltIndex) {
           .select($"qid", $"w.docid".as("docid"), $"w.score".as("score"))
           .as[(String, Long, Float)]
     }
+  }
 
-    scoresCollapsed
+  /** term → (weight, the clauses using it as (qid, qidx, boost)) over the
+    * indexed terms — the driver-side plan [[termPartials]] runs.
+    */
+  private def termPlan(clauses: Seq[WeightedClause], dfs: Map[String, (Long, Long)],
+                       scorer: Scorer)(boost: WeightedClause => Float)
+      : Map[String, (Float, Array[(String, Int, Float)])] = {
+    val stats = collStats
+    clauses.groupBy(_.term).flatMap { case (term, cs) =>
+      dfs.get(term).map { case (df, cf) =>
+        term -> (scorer.termWeight(df, cf, stats),
+          cs.map(c => (c.qid, c.qidx, boost(c))).toArray)
+      }
+    }
+  }
+
+  /** Exhaustive term partials (qid, docid, qidx, boosted partial score):
+    * one decode of each planned term's runs, scored once per posting and
+    * fanned out to the clauses using the term.
+    */
+  private def termPartials(posts: Dataset[PostingRun],
+                           plan: Map[String, (Float, Array[(String, Int, Float)])],
+                           scorer: Scorer): Dataset[(String, Long, Int, Float)] = {
+    import spark.implicits._
+    val stats = collStats
+    posts.flatMap { run =>
+      val (idf, cs) = plan(run.term)
+      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
+        .flatMap { p =>
+          val s = scorer.score(p.tf, p.dl, idf, stats)
+          cs.iterator.map { case (qid, qidx, boost) =>
+            (qid, p.docid, qidx, if (boost == 1.0f) s else s * boost)
+          }
+        }
+    }
+  }
+
+  /** (qid, docid) of every document holding a negated term of its query
+    * (`negTerms` = (qid, analyzed term)).
+    */
+  private def negPairs(negTerms: Seq[(String, String)]): DataFrame = {
+    import spark.implicits._
+    val byTerm: Map[String, Array[String]] =
+      negTerms.groupBy(_._2).map { case (t, qs) => t -> qs.map(_._1).distinct.toArray }
+    postingsFor(index.postingsDecode, byTerm.keys).flatMap { run =>
+      val qids = byTerm(run.term)
+      PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
+        .flatMap(p => qids.iterator.map(q => (q, p.docid)))
+    }.toDF("qid", "docid")
+  }
+
+  /** Distinct (key, docid) pairs: every live document holding a term of
+    * `byTerm`, once per key the term maps to — a docid-only decode
+    * ([[BuiltIndex.postingsMatch]]), no scoring.
+    */
+  private def matchPairs(byTerm: Map[String, Seq[String]], keyCol: String): DataFrame = {
+    import spark.implicits._
+    val tombL = tombstonesBc
+    postingsFor(index.postingsMatch, byTerm.keys).flatMap { run =>
+      val keys = byTerm(run.term)
+      PostingCodec.decodeDocids(run.ndocs, run.doc_blob)
+        .filter(d => Searcher.liveDoc(tombL, d))
+        .flatMap(d => keys.iterator.map(key => (key, d)))
+    }.toDF(keyCol, "docid").distinct()
   }
 
   /** Bounded top-k collector + docno attach + first-occurrence docno dedup
@@ -2181,8 +1808,6 @@ final class Searcher(val index: BuiltIndex) {
   private[search] def collectTopK(scored: Dataset[(String, Long, Float)],
                                   k: Int, runtag: String): Dataset[RunLine] = {
     import spark.implicits._
-    val agg = new TopKAgg(k, implicitly[Encoder[Seq[(Long, Float)]]],
-      implicitly[Encoder[Seq[(Long, Float)]]])
     // r6: driver-side tail. The bounded collector's output is ≤ k rows per
     // topic BY CONSTRUCTION — the exact row set the old plan broadcast to
     // every executor for the docno join — so collecting it to the driver
@@ -2193,7 +1818,7 @@ final class Searcher(val index: BuiltIndex) {
     // build job, and the first-occurrence-by-rank docno dedup — logic
     // unchanged — runs over the driver rows instead of a third shuffle.
     val top: Array[(String, Seq[(Long, Float)])] =
-      scored.groupByKey(_._1).agg(agg.toColumn).collect()
+      scored.groupByKey(_._1).agg(topK(k).toColumn).collect()
     val ranked: Seq[(String, Long, Int, Float)] = top.toSeq.flatMap {
       case (qid, hits) =>
         hits.iterator.zipWithIndex.map { case ((docid, score), i) =>
@@ -2238,10 +1863,7 @@ final class Searcher(val index: BuiltIndex) {
       val (df, cf) = dfs(t)
       t -> scorer.termWeight(df, cf, stats)
     }.toMap
-    val buckets = byTerm.keys.map(IndexLayout.bucketOf(_, index.cfg.buckets)).toSeq.distinct
-    val posts = index.postingsDecode
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(byTerm.keys.toSeq: _*))
-      .as[PostingRun]
+    val posts = postingsFor(index.postingsDecode, byTerm.keys)
     // tombstoned docs must not seed θ: a deleted doc's score could push the
     // lower bound past the true live kth score and over-prune live blocks
     val tombL = tombstonesBc
@@ -2255,9 +1877,7 @@ final class Searcher(val index: BuiltIndex) {
           qs.iterator.map { case (qid, boost) => (qid, p.docid, s * boost) }
         }
     }
-    val agg = new TopKAgg(k, implicitly[Encoder[Seq[(Long, Float)]]],
-      implicitly[Encoder[Seq[(Long, Float)]]])
-    partials.groupByKey(_._1).agg(agg.toColumn).collect()
+    partials.groupByKey(_._1).agg(topK(k).toColumn).collect()
       .collect { case (qid, hits) if hits.size >= k => qid -> hits.last._2 }
       .toMap
   }
@@ -2312,26 +1932,10 @@ final class Searcher(val index: BuiltIndex) {
     */
   def matchCounts(topics: Seq[Topic]): Map[String, Long] = {
     import spark.implicits._
-    requireDistinctQids(topics)
-    val pairs = topics.flatMap(t =>
-      analyzer.analyze(t.text).distinct.map(term => (t.qid, term)))
-    if (pairs.isEmpty) return topics.map(_.qid -> 0L).toMap
-    val byTerm: Map[String, Array[String]] =
-      pairs.groupBy(_._2).map { case (t, qs) => t -> qs.map(_._1).distinct.toArray }
-    val termSeq = byTerm.keys.toSeq
-    val buckets = termSeq.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct
+    val byTerm = termQids(topics)
+    if (byTerm.isEmpty) return topics.map(_.qid -> 0L).toMap
     val docShift = index.cfg.groupShift + index.cfg.mergeShift
-    val tombL = tombstonesBc
-    val matched = index.postingsDecode
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(termSeq: _*))
-      .as[PostingRun]
-      .flatMap { run =>
-        val qids = byTerm(run.term)
-        PostingCodec.decodeBlobs(run.ndocs, run.doc_blob, run.tf_blob, run.dl_blob)
-          .filter(p => Searcher.liveDoc(tombL, p.docid))
-          .flatMap(p => qids.iterator.map(q => (q, p.docid)))
-      }.toDF("qid", "docid").distinct()
-    val counts = matched
+    val counts = matchPairs(byTerm, "qid")
       .withColumn("grp", shiftright(col("docid"), docShift))
       .join(index.docs.select(col("docid"), col("docno"), col("grp")),
         Seq("docid", "grp"))
@@ -2385,8 +1989,7 @@ final class Searcher(val index: BuiltIndex) {
       complementQids.map { case (q, s) => q -> (s, Vector.empty[Long]) }: _*)
     // constant score per qid → TopKAgg's (score desc, docid asc) order is
     // exactly the docid-asc min-k this tail needs, map-side bounded
-    val agg = new TopKAgg(k, implicitly[Encoder[Seq[(Long, Float)]]],
-      implicitly[Encoder[Seq[(Long, Float)]]])
+    val agg = topK(k)
     val excl = excluded
     val tombL = tombstonesBc // deleted docs don't match-all either
     var idx = 0
@@ -2445,68 +2048,45 @@ final class Searcher(val index: BuiltIndex) {
     lines.map(l => s"${l.qid} Q0 ${l.docno} ${l.rank} ${l.score} ${l.runtag}")
 }
 
-/** Bounded top-k typed aggregator: buffers stay ≤ 4k entries, partial
-  * buffers merge associatively (map-side combine), final order is
-  * (score desc, docid asc).
-  */
-final class TopKAgg(k: Int,
-                    bufEnc: Encoder[Seq[(Long, Float)]],
-                    outEnc: Encoder[Seq[(Long, Float)]])
-    extends Aggregator[(String, Long, Float), Seq[(Long, Float)], Seq[(Long, Float)]] {
-  private def better(a: (Long, Float), b: (Long, Float)): Boolean =
-    a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
-  private def compact(s: Seq[(Long, Float)]): Seq[(Long, Float)] =
-    s.sortWith(better).take(k)
-  def zero: Seq[(Long, Float)] = Vector.empty
-  def reduce(buf: Seq[(Long, Float)], in: (String, Long, Float)): Seq[(Long, Float)] = {
-    val b2 = buf :+ ((in._2, in._3))
-    if (b2.size >= 4 * k) compact(b2) else b2
-  }
-  def merge(a: Seq[(Long, Float)], b: Seq[(Long, Float)]): Seq[(Long, Float)] =
-    compact(a ++ b)
-  def finish(buf: Seq[(Long, Float)]): Seq[(Long, Float)] = compact(buf)
-  def bufferEncoder: Encoder[Seq[(Long, Float)]] = bufEnc
-  def outputEncoder: Encoder[Seq[(Long, Float)]] = outEnc
-}
-
-/** Bounded top-k by (key asc, docid asc) — the TopFieldCollector analog of
-  * [[TopKAgg]]: buffers stay ≤ 4k entries, partials merge associatively.
-  */
-final class SortTopKAgg(k: Int,
-                        bufEnc: Encoder[Seq[(String, Long)]],
-                        outEnc: Encoder[Seq[(String, Long)]])
-    extends Aggregator[(String, Long, String), Seq[(String, Long)], Seq[(String, Long)]] {
-  private def better(a: (String, Long), b: (String, Long)): Boolean = {
-    val c = a._1.compareTo(b._1)
-    c < 0 || (c == 0 && a._2 < b._2)
-  }
-  private def compact(s: Seq[(String, Long)]): Seq[(String, Long)] =
-    s.sortWith(better).take(k)
-  def zero: Seq[(String, Long)] = Vector.empty
-  def reduce(buf: Seq[(String, Long)], in: (String, Long, String)): Seq[(String, Long)] = {
-    val b2 = buf :+ ((in._3, in._2))
-    if (b2.size >= 4 * k) compact(b2) else b2
-  }
-  def merge(a: Seq[(String, Long)], b: Seq[(String, Long)]): Seq[(String, Long)] =
-    compact(a ++ b)
-  def finish(buf: Seq[(String, Long)]): Seq[(String, Long)] = compact(buf)
-  def bufferEncoder: Encoder[Seq[(String, Long)]] = bufEnc
-  def outputEncoder: Encoder[Seq[(String, Long)]] = outEnc
-}
-
 object Searcher {
-  /** Per-index-identity term-stat memos (see the instance field): an
-    * index snapshot's term statistics are immutable, so every Searcher on
-    * the same [[BuiltIndex.statsKey]] shares one memo for the life of the
-    * JVM.
+  /** Per-index-identity term-stat memos, term → Some((df, cf)) | None for
+    * terms absent from the index: an index snapshot's term statistics are
+    * immutable, so every Searcher on the same [[BuiltIndex.statsKey]]
+    * (entries construct fresh Searchers per delete overlay or purge
+    * handle) shares one memo for the life of the JVM.
     */
   private val statsCaches = scala.collection.concurrent.TrieMap
     .empty[String, scala.collection.concurrent.TrieMap[String, Option[(Long, Long)]]]
 
-  private[search] def statsCacheFor(index: BuiltIndex)
-      : scala.collection.concurrent.TrieMap[String, Option[(Long, Long)]] =
-    statsCaches.getOrElseUpdate(index.statsKey,
+  /** (df, cf) of the indexed `terms` (≙ TermStatistics consumed at
+    * `BM25.java:61`) — the only term-stats read: one bucket-pruned
+    * term_stats point lookup for the terms not yet in the index's memo, no
+    * job when all are. Absent terms are memoized as absent.
+    */
+  private[search] def termStats(index: BuiltIndex, terms: Seq[String])
+      : Map[String, (Long, Long)] = {
+    val memo = statsCaches.getOrElseUpdate(index.statsKey,
       new scala.collection.concurrent.TrieMap[String, Option[(Long, Long)]]())
+    val missing = terms.distinct.filterNot(memo.contains)
+    if (missing.nonEmpty) {
+      import index.spark.implicits._
+      bucketPruned(index, index.termStats, missing)
+        .select("term", "df", "cf").as[(String, Long, Long)].collect()
+        .foreach(t => memo.put(t._1, Some((t._2, t._3))))
+      missing.foreach(memo.putIfAbsent(_, None))
+    }
+    terms.flatMap(t => memo.get(t).flatten.map(t -> _)).toMap
+  }
+
+  /** `table` (postings or term stats) restricted to `terms`: bucket
+    * partition pruning plus the term predicate pushed down to the scan.
+    */
+  private[search] def bucketPruned(index: BuiltIndex, table: DataFrame,
+                                   terms: Iterable[String]): DataFrame = {
+    val ts = terms.toSeq
+    table.where(col("bucket").isin(ts.map(IndexLayout.bucketOf(_, index.cfg.buckets)).distinct: _*) &&
+      col("term").isin(ts: _*))
+  }
 
   /** True iff `docid` survives the broadcast tombstone overlay (None =
     * delete-free index). Static so executor closures capture only the

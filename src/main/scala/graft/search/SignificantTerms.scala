@@ -1,9 +1,7 @@
 package graft.search
 
 import graft.analysis.Analyzer
-import graft.index.IndexLayout
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Significant-terms aggregation (≙ Elasticsearch `significant_terms`):
   * for each query, the terms whose document frequency in the query's HIT
@@ -49,11 +47,8 @@ object SignificantTerms {
       ds.flatMap(d => termsByDoc(d).map(t => (q, t)))
     }.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
 
-    val allTerms = fg.keys.map(_._2).toSeq.distinct
-    val buckets = allTerms.map(IndexLayout.bucketOf(_, idx.cfg.buckets)).distinct
-    val bg: Map[String, Long] = idx.termStats
-      .where(col("bucket").isin(buckets: _*) && col("term").isin(allTerms: _*))
-      .select(col("term"), col("df")).as[(String, Long)].collect().toMap
+    val bg: Map[String, Long] = Searcher.termStats(idx, fg.keys.map(_._2).toSeq.distinct)
+      .map { case (t, (df, _)) => t -> df }
 
     val n = idx.stats.max_doc
     val rows: Seq[(String, String, Long, Long, Long, Long)] =

@@ -4,7 +4,7 @@ import graft.LtrSettings
 import graft.analysis.Analyzer
 import graft.corpus.Parsers
 import graft.index.{BuiltIndex, IndexBuilder, IndexConfig}
-import graft.search.{Feedback, Searcher, Snippets, Topic}
+import graft.search.{Feedback, Query, Searcher, Snippets, Topic}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Command-line parity with the reference's two entry points:
@@ -152,8 +152,8 @@ object BatchSearchRunner {
         idx.cfg.analyzer, t.topTermsToKeep)
     }.toMap
     val fbDs: Seq[Dataset[RunLine]] = fbTopics.map { t =>
-      searcher.searchClauses(fbClauses(t.qid), k, scorer,
-        excludeDocnos = Map(t.qid -> t.feedbackDocs.flatMap(_.docno).toSet))
+      searcher.searchClauses(Query(fbClauses(t.qid),
+        excludeDocnos = Map(t.qid -> t.feedbackDocs.flatMap(_.docno).toSet)), k, scorer)
     }
     val allDs = (plainDs.toSeq ++ fbDs).reduceOption(_ union _)
 

@@ -83,10 +83,9 @@ object Explain {
     graft.ops.Curation.seededShuffle(corp, "s1").explain("formatted")
 
     println("\n========== synonym-group search plan (group postings in the same bucket-pruned scan; one extra tiny shuffle for the tf sum) ==========")
-    searcher.searchClauses(
-      Seq(graft.search.WeightedClause("1", 0, "hash", 1.0f)),
-      k = 20,
-      synonymClauses = Seq(graft.search.SynonymClause("1", 1, Seq("scan", "window"), 1.0f)))
+    searcher.searchClauses(graft.search.Query(Seq(
+      graft.search.WeightedClause("1", 0, "hash", 1.0f),
+      graft.search.SynonymClause("1", 1, Seq("scan", "window"), 1.0f))), k = 20)
       .explain("formatted")
 
     println("\n========== hybrid RRF fusion (two bounded top-k inputs → full-outer join on ≤2k rows/query; the window runs over that bounded set) ==========")

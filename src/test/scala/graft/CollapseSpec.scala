@@ -70,12 +70,12 @@ class CollapseSpec extends AnyFunSuite {
 
   test("filter composes with collapse (filter first, then one per key)") {
     val (s, keys) = fixture
-    import graft.search.WeightedClause
+    import graft.search.{Query, WeightedClause}
     val notA = keys.where(org.apache.spark.sql.functions.col("ckey") =!= "ra")
       .select("docid")
-    val hits = s.searchClauses(
+    val hits = s.searchClauses(Query(
       Seq(WeightedClause("1", 0, "hot", 1.0f), WeightedClause("1", 1, "cold", 1.0f)),
-      5, filterDocids = Some(notA), collapseKeys = Some(keys))
+      filter = Some(notA), collapse = Some(keys)), 5)
       .collect().sortBy(_.rank)
     // ra filtered out entirely; rb collapses to its best remaining doc
     assert(hits.map(_.docno).forall(d => d.startsWith("b")))
@@ -84,10 +84,10 @@ class CollapseSpec extends AnyFunSuite {
 
   test("pruning is structurally rejected under collapse") {
     val (s, keys) = fixture
-    import graft.search.WeightedClause
+    import graft.search.{Query, WeightedClause}
     intercept[IllegalArgumentException] {
-      s.searchClauses(Seq(WeightedClause("1", 0, "hot", 1.0f)), 2,
-        pruning = true, collapseKeys = Some(keys))
+      s.searchClauses(Query(Seq(WeightedClause("1", 0, "hot", 1.0f)),
+        prune = true, collapse = Some(keys)), 2)
     }
   }
 

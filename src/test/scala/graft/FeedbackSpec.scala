@@ -85,8 +85,8 @@ class FeedbackSpec extends AnyFunSuite {
     val dir = TestSpark.tmpDir("wc")
     val idx = IndexBuilder.build(corpusDF(docs), dir, IndexConfig(groupShift = 1, mergeShift = 1))
     val s = new Searcher(idx)
-    val plain = s.searchClauses(Seq(WeightedClause("q", 0, "foo", 1.0f))).collect()
-    val boosted = s.searchClauses(Seq(WeightedClause("q", 0, "foo", 2.0f))).collect()
+    val plain = s.searchClauses(Query(Seq(WeightedClause("q", 0, "foo", 1.0f)))).collect()
+    val boosted = s.searchClauses(Query(Seq(WeightedClause("q", 0, "foo", 2.0f)))).collect()
     assert(plain.length == 2 && boosted.length == 2)
     plain.zip(boosted).foreach { case (p, b) =>
       assert(b.score == p.score * 2.0f)

@@ -2,7 +2,7 @@ package graft
 
 import graft.analysis.AnalyzerConfig
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.search.{PhraseClause, Searcher}
+import graft.search.{PhraseClause, Query, Searcher}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MultiPhraseQuery union slots: several terms sharing one phrase offset
@@ -30,14 +30,14 @@ class MultiPhraseSpec extends AnyFunSuite {
 
   test("last-slot union: quick (fox|foo) matches either continuation") {
     val pc = PhraseClause("q", 0, Seq(("quick", 0), ("fox", 1), ("foo", 1)), 1.0f)
-    val got = searcher.searchClauses(Nil, 10, phraseClauses = Seq(pc))
+    val got = searcher.searchClauses(Query(Seq(pc)), 10)
       .collect().sortBy(_.rank).map(_.docno).toSeq
     assert(got.toSet == Set("p-1", "p-2", "p-3"))
   }
 
   test("first-slot union: (quick|slow) fox") {
     val pc = PhraseClause("q", 0, Seq(("quick", 0), ("slow", 0), ("fox", 1)), 1.0f)
-    val got = searcher.searchClauses(Nil, 10, phraseClauses = Seq(pc))
+    val got = searcher.searchClauses(Query(Seq(pc)), 10)
       .collect().map(_.docno).toSet
     assert(got == Set("p-1", "p-3", "p-5"))
   }
@@ -48,7 +48,7 @@ class MultiPhraseSpec extends AnyFunSuite {
     // (dl 5); both outrank nothing else under (fox|dog) since dog only
     // follows quick in p-3 (freq 2 there: quick dog AND quick fox)
     val pc = PhraseClause("q", 0, Seq(("quick", 0), ("fox", 1), ("dog", 1)), 1.0f)
-    val got = searcher.searchClauses(Nil, 10, phraseClauses = Seq(pc))
+    val got = searcher.searchClauses(Query(Seq(pc)), 10)
       .collect().sortBy(_.rank).map(_.docno).toSeq
     assert(got.head == "p-3", s"freq-2 doc must rank first, got $got")
     assert(got.toSet == Set("p-1", "p-3"))
@@ -56,7 +56,7 @@ class MultiPhraseSpec extends AnyFunSuite {
 
   test("plain phrases are unchanged by the union-slot layout") {
     val pc = PhraseClause("q", 0, Seq(("quick", 0), ("fox", 1)), 1.0f)
-    val got = searcher.searchClauses(Nil, 10, phraseClauses = Seq(pc))
+    val got = searcher.searchClauses(Query(Seq(pc)), 10)
       .collect().map(_.docno).toSet
     assert(got == Set("p-1", "p-3"))
   }
@@ -65,7 +65,7 @@ class MultiPhraseSpec extends AnyFunSuite {
     val pc = PhraseClause("q", 0, Seq(("quick", 0), ("fox", 1), ("foo", 1)),
       1.0f, slop = 1)
     intercept[IllegalArgumentException] {
-      searcher.searchClauses(Nil, 10, phraseClauses = Seq(pc))
+      searcher.searchClauses(Query(Seq(pc)), 10)
     }
   }
 
@@ -74,8 +74,8 @@ class MultiPhraseSpec extends AnyFunSuite {
     val topic = Topic("r", "quick fox")
     val base = searcher.search(Seq(topic), 10).collect()
       .map(l => l.docno -> l.score).toMap
-    val phr = searcher.searchClauses(Nil, 10, phraseClauses =
-        Seq(PhraseClause("r", 0, Seq(("quick", 0), ("fox", 1)), 1.0f)))
+    val phr = searcher.searchClauses(Query(
+        Seq(PhraseClause("r", 0, Seq(("quick", 0), ("fox", 1)), 1.0f))), 10)
       .collect().map(l => l.docno -> l.score).toMap
     val got = searcher.searchRescore(Seq(topic),
         Seq(PhraseClause("r", 0, Seq(("quick", 0), ("fox", 1)), 1.0f)),

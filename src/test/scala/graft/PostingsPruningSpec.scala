@@ -89,8 +89,8 @@ class PostingsPruningSpec extends AnyFunSuite {
     assert(termScans.nonEmpty)
     termScans.foreach(f => assert(!f.contains("pos_blob"), f))
 
-    val phrase = s.scoredClauses(Nil, phraseClauses = Seq(
-      graft.search.PhraseClause("p1", 0, Seq("alpha" -> 0, "beta" -> 1), 1.0f)))
+    val phrase = s.scoredClauses(graft.search.Query(Seq(
+      graft.search.PhraseClause("p1", 0, Seq("alpha" -> 0, "beta" -> 1), 1.0f))))
     val phraseScans = scanFields(phrase.toDF())
     assert(phraseScans.exists(_.contains("pos_blob")),
       s"phrase plan lost its positions read: $phraseScans")

@@ -2,7 +2,7 @@ package graft
 
 import graft.analysis.{Analyzer, AnalyzerConfig}
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.search.{Searcher, Topic, WeightedClause}
+import graft.search.{Query, Searcher, Topic, WeightedClause}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Index-time word shingles (AnalyzerConfig.shingleSize ≙ ShingleFilter
@@ -56,7 +56,7 @@ class ShingleSpec extends AnyFunSuite {
       IndexConfig(indexPositions = true))
     // single-term read of the shingle "hash join"
     val viaShingle = new Searcher(shIdx)
-      .searchClauses(Seq(WeightedClause("1", 0, "hash join", 1.0f)), 10)
+      .searchClauses(Query(Seq(WeightedClause("1", 0, "hash join", 1.0f))), 10)
       .collect().map(_.docno).toSet
     // the positional phrase walk over the plain index
     val viaPhrase = new Searcher(posIdx)
@@ -77,7 +77,7 @@ class ShingleSpec extends AnyFunSuite {
     val sr = new Searcher(shIdx)
     val viaApi = sr.searchPhraseShingle(Seq("1" -> "hash join"), 10).collect()
     val viaTerm = sr
-      .searchClauses(Seq(WeightedClause("1", 0, "hash join", 1.0f)), 10)
+      .searchClauses(Query(Seq(WeightedClause("1", 0, "hash join", 1.0f))), 10)
       .collect()
     // bit-identical RunLines: same docs, same ranks, same Float scores
     assert(viaApi.toSeq.map(r => (r.docno, r.rank, r.score)) ==
@@ -108,7 +108,7 @@ class ShingleSpec extends AnyFunSuite {
     // single-term clause — exactly what the rewrite emits.
     val sr = new Searcher(shIdx)
     val scans = sr
-      .scoredClauses(Seq(graft.search.WeightedClause("1", 0, "hash join", 1.0f)))
+      .scoredClauses(Query(Seq(graft.search.WeightedClause("1", 0, "hash join", 1.0f))))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       .linesIterator.filter(_.trim.startsWith("ReadSchema")).toSeq

@@ -1,7 +1,7 @@
 package graft
 
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.search.{Searcher, SynonymClause, Topic, WeightedClause}
+import graft.search.{Query, Searcher, SynonymClause, Topic, WeightedClause}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Synonym-group clauses ([[search.SynonymClause]] ≙ Lucene SynonymQuery):
@@ -31,7 +31,7 @@ class SynonymSpec extends AnyFunSuite {
   }
 
   private def run(wcs: Seq[WeightedClause], syn: Seq[SynonymClause]) =
-    searcher.searchClauses(wcs, k = 10, synonymClauses = syn)
+    searcher.searchClauses(Query(wcs ++ syn), k = 10)
       .collect().sortBy(_.rank).map(l => (l.docno, l.score)).toSeq
 
   test("singleton group ≡ plain term clause, float-identical") {
